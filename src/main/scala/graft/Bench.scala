@@ -1,11 +1,32 @@
 package graft
 
+import scala.util.control.NonFatal
+
 import org.apache.spark.sql.SparkSession
 
 /** Benchmark main: times every SparkEntry query at SPARK_GRAFT_SF_DIR
   * and prints one JSON line. A small untimed warmup first so the
   * first timed query isn't charged for JVM/codegen/session startup. */
 object Bench {
+  /** Time each named query TWICE with `run` (see [[main]] for why
+    * min-of-two). A query whose run throws (non-fatal) is reported
+    * in the second list and never as a time: the time to a failure
+    * says nothing about the query. Its second leg is skipped. */
+  private[graft] def timeAll(names: Seq[String], run: String => Unit)
+      : (Seq[(String, (Double, Double))], Seq[String]) = {
+    def timeOnce(name: String): Option[Double] = {
+      val t0 = System.nanoTime()
+      try { run(name); Some((System.nanoTime() - t0) / 1e9) }
+      catch {
+        case NonFatal(e) =>
+          System.err.println(s"Bench: query $name failed: $e")
+          None
+      }
+    }
+    val timed = names.map(n => n -> timeOnce(n).flatMap(a => timeOnce(n).map(b => (a, b))))
+    (timed.collect { case (n, Some(ab)) => n -> ab }, timed.collect { case (n, None) => n })
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
@@ -31,20 +52,8 @@ object Bench {
     // warmup: exercise codegen, shuffle, broadcast machinery once
     spark.range(1000).selectExpr("sum(id)").collect()
     try run("q1_agg")
-    catch { case _: Throwable => }
+    catch { case NonFatal(_) => }
 
-    // Each query runs TWICE and records the min: a GC lump or one-time
-    // side effect (first-touch topic materialization, codegen compile)
-    // lands on one run, not both, so the min is the engine's plan cost
-    // rather than whichever environmental hiccup coincided with it.
-    // Round-5 evidence: the driver-invoked artifact disagreed with the
-    // committed same-code run by 1.6× overall and 21× on one query —
-    // pure measurement noise, now excluded by construction.
-    def timeOnce(name: String): Double = {
-      val t0 = System.nanoTime()
-      try run(name) catch { case _: Throwable => () }
-      (System.nanoTime() - t0) / 1e9
-    }
     // Telemetry for self-adjudication (VERDICT r9: a contended driver
     // box produced an official artifact 57% over a quiet-box rerun on
     // unchanged code; with load + both run times in the artifact, a
@@ -57,9 +66,14 @@ object Bench {
         (p(0).toDouble, p(1).toDouble)
       } catch { case _: Throwable => (-1.0, -1.0) }
     val loadBefore = loadAvg()
-    val both = SparkEntry.queries.keys.toSeq.sorted.map { name =>
-      name -> ((timeOnce(name), timeOnce(name)))
-    }
+    // Each query runs TWICE and records the min: a GC lump or one-time
+    // side effect (first-touch topic materialization, codegen compile)
+    // lands on one run, not both, so the min is the engine's plan cost
+    // rather than whichever environmental hiccup coincided with it.
+    // Round-5 evidence: the driver-invoked artifact disagreed with the
+    // committed same-code run by 1.6× overall and 21× on one query —
+    // pure measurement noise, now excluded by construction.
+    val (both, failed) = timeAll(SparkEntry.queries.keys.toSeq.sorted, run)
     val loadAfter = loadAvg()
     // Charge GraftCaches builds to the total (round 16): min-of-two
     // keeps the warm leg, so the gram/posting/simhash/cosine-edge
@@ -89,6 +103,7 @@ object Bench {
       val p = if (v >= 10) "%.1f" else "%.2f" // 10 ms resolution suffices
       String.format(java.util.Locale.ROOT, p, Double.box(v))
     }
+    val failedJson = failed.map("\"" + _ + "\"").mkString("[", ",", "]")
     val total = if (results.nonEmpty) results.map(_._2).sum else 0.0
     // loadavg (1/5-min, before→after) + the sum of each run leg: a
     // judge can read contention off the line (load ≫ harness CPUs, or
@@ -107,7 +122,7 @@ object Bench {
       val om = if (omitted > 0) s""","queries_omitted":$omitted""" else ""
       // basename only: the full path costs 17 chars of the 2000-char
       // tail budget and the driver records the SF dir itself
-      s"""{"metric":"total","value":${fmt(total)},"unit":"sec",$telemetry"queries":$qs$om,"sf":"${sfDir.split('/').last}"}"""
+      s"""{"metric":"total","value":${fmt(total)},"unit":"sec",$telemetry"queries":$qs$om,"failed":$failedJson,"sf":"${sfDir.split('/').last}"}"""
     }
     var kept = results
     var line = render(kept, results.size - kept.size)
@@ -125,7 +140,7 @@ object Bench {
       val builds = cacheBuilds.map { case (k, s) => "\"" + k + "\":" + fmt(s) }
         .mkString("{", ",", "}")
       java.nio.file.Files.writeString(java.nio.file.Paths.get(path),
-        s"""{"metric":"total","value":${fmt(total)},"unit":"sec",$telemetry"cpus":$cpus,"cache_builds":$builds,"queries_runs":$rows,"sf":"${sfDir.split('/').last}"}""" + "\n")
+        s"""{"metric":"total","value":${fmt(total)},"unit":"sec",$telemetry"cpus":$cpus,"cache_builds":$builds,"queries_runs":$rows,"failed":$failedJson,"sf":"${sfDir.split('/').last}"}""" + "\n")
     }
     operators.GraftCaches.releaseAll() // nothing stays pinned after a run
     spark.stop()

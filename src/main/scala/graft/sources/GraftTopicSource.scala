@@ -4,15 +4,15 @@ import java.nio.file.{Files, Paths}
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{Path => HPath}
+import org.apache.parquet.ParquetReadOptions
+import org.apache.parquet.conf.PlainParquetConfiguration
 import org.apache.parquet.example.data.Group
 import org.apache.parquet.filter2.compat.FilterCompat
 import org.apache.parquet.filter2.predicate.{FilterApi, FilterPredicate}
 import org.apache.parquet.hadoop.{ParquetFileReader, ParquetReader}
 import org.apache.parquet.hadoop.api.ReadSupport
 import org.apache.parquet.hadoop.example.GroupReadSupport
-import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.parquet.io.LocalInputFile
 import org.apache.parquet.schema.{LogicalTypeAnnotation, MessageType}
 import org.apache.parquet.schema.LogicalTypeAnnotation.TimestampLogicalTypeAnnotation
 import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
@@ -464,11 +464,13 @@ object GraftTopicStreamOffset {
 class GraftTopicFileReader(part: GraftTopicInputPartition, required: StructType,
     bounds: OffsetBounds) extends PartitionReader[InternalRow] {
 
-  private val conf = new Configuration()
-  private val hpath = new HPath(part.file)
+  // topic files live under the manifest's local data dir: open them
+  // as local files, not through Hadoop's FileSystem layer
+  private val conf = new PlainParquetConfiguration()
+  private val file = new LocalInputFile(Paths.get(part.file))
 
   private val fileSchema: MessageType = {
-    val fr = ParquetFileReader.open(HadoopInputFile.fromPath(hpath, conf))
+    val fr = ParquetFileReader.open(file, ParquetReadOptions.builder(conf).build())
     try fr.getFooter.getFileMetaData.getSchema finally fr.close()
   }
 
@@ -487,7 +489,9 @@ class GraftTopicFileReader(part: GraftTopicInputPartition, required: StructType,
 
   private val reader: ParquetReader[Group] = {
     conf.set(ReadSupport.PARQUET_READ_SCHEMA, projection.toString)
-    val b = ParquetReader.builder(new GroupReadSupport(), hpath).withConf(conf)
+    val b = new ParquetReader.Builder[Group](file, conf) {
+      override protected def getReadSupport() = new GroupReadSupport()
+    }
     offsetPredicate.foreach(p => b.withFilter(FilterCompat.get(p)))
     b.build()
   }

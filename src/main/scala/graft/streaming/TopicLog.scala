@@ -150,8 +150,9 @@ class TopicLog private (
   /** Driver-direct produce for PRE-ROUTED record batches — the wire
     * path's write, where a request carries a few thousand rows and a
     * Spark job is pure scheduling overhead. One offset-sorted parquet
-    * file per partition is written with parquet-hadoop ON THE DRIVER
-    * (no Spark job), then the append rides the SAME staging-move +
+    * file per partition is written ON THE DRIVER as a local file
+    * ([[TopicLog.writeDirect]]: no Spark job, no Hadoop FileSystem),
+    * then the append rides the SAME staging-move +
     * CAS manifest commit as [[produce]] — identical durability and
     * concurrency semantics, including losing a conflicting race with
     * [[TopicLog.ConcurrentProduceException]] for the caller to retry.
@@ -223,8 +224,8 @@ class TopicLog private (
       }.toSeq
     deleteRecursively(staging)
     // footer reads are independent per file — read them concurrently
-    // (serial reads cost a produce ~20-40 ms PER FILE of commit
-    // latency; one produce can stage one file per partition)
+    // (one produce can stage one file per partition; a footer read
+    // costs ~0.1 ms per small file, see offsetRangeOf)
     import scala.concurrent.{Await, Future}
     import scala.concurrent.duration.Duration
     import scala.concurrent.ExecutionContext.Implicits.global
@@ -1208,19 +1209,19 @@ object TopicLog {
   private[graft] def manifestRanges(topicDir: String): Map[String, (Long, Long)] =
     latestManifest(topicDir).map(_.fileRanges).getOrElse(Map.empty)
 
-  /** One shared Hadoop conf for footer reads: constructing a
-    * Configuration parses XML resources (~tens of ms) — per-file
-    * construction cost a produce ~1.5 s for 32 partitions. */
-  private lazy val footerConf = new org.apache.hadoop.conf.Configuration()
-
   /** Read a parquet file's offset column min/max from its footer
     * (row-group statistics) — one footer read at produce time buys
-    * planning-time pruning forever after. */
+    * planning-time pruning forever after. The file is opened as a
+    * local file with explicit read options: 0.06-0.15 ms (p50) per
+    * 8-record file on a 4-core x86 box, vs 8-13 ms through Hadoop's
+    * FileSystem layer. Pass the options: the one-argument
+    * `open(InputFile)` still builds a Hadoop configuration. */
   private[graft] def offsetRangeOf(file: Path): (Long, Long) = {
     import scala.jdk.CollectionConverters._
-    val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-      new org.apache.hadoop.fs.Path(file.toString), footerConf)
-    val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
+    val r = org.apache.parquet.hadoop.ParquetFileReader.open(
+      new org.apache.parquet.io.LocalInputFile(file),
+      org.apache.parquet.ParquetReadOptions
+        .builder(new org.apache.parquet.conf.PlainParquetConfiguration()).build())
     try {
       var lo = Long.MaxValue
       var hi = Long.MinValue
@@ -1270,32 +1271,21 @@ object TopicLog {
         |  required int64 offset;
         |}""".stripMargin)
 
-  /** One shared read conf (Configuration construction parses the
-    * Hadoop default XMLs — per-call instances cost milliseconds the
-    * per-request wire path would pay on every file open) and one
-    * shared write conf carrying the constant [[directWriteSchema]].
-    * Both are effectively read-only after init. */
-  private lazy val directReadConf = new org.apache.hadoop.conf.Configuration()
-  private lazy val directWriteConf = {
-    val c = new org.apache.hadoop.conf.Configuration()
-    org.apache.parquet.hadoop.example.GroupWriteSupport
-      .setSchema(directWriteSchema, c)
-    c
-  }
-
-  /** Write ONE offset-sorted record file with parquet-hadoop on the
-    * driver — [[produceDirect]]'s writer. Snappy like Spark's
-    * default, so direct and Spark-written files are uniform. */
+  /** Write ONE offset-sorted record file on the driver as a local
+    * file, with no Hadoop FileSystem or `.crc` sidecar —
+    * [[produceDirect]]'s writer: 0.7-1.1 ms (p50) per 8-record file
+    * on a 4-core x86 box, vs 8-12 ms through Hadoop. Snappy like
+    * Spark's default, so direct and Spark-written files are uniform. */
   private[streaming] def writeDirect(file: Path,
       rows: Iterator[(Long, Array[Byte], Array[Byte],
         Map[String, Array[Byte]], Long)]): Unit = {
     import org.apache.parquet.example.data.simple.SimpleGroupFactory
-    import org.apache.parquet.hadoop.example.{ExampleParquetWriter, GroupWriteSupport}
+    import org.apache.parquet.hadoop.example.ExampleParquetWriter
     import org.apache.parquet.io.api.Binary
 
     val writer = ExampleParquetWriter
-      .builder(new org.apache.hadoop.fs.Path(file.toString))
-      .withConf(directWriteConf)
+      .builder(new org.apache.parquet.io.LocalOutputFile(file))
+      .withConf(new org.apache.parquet.conf.PlainParquetConfiguration())
       .withType(directWriteSchema)
       .withCompressionCodec(
         org.apache.parquet.hadoop.metadata.CompressionCodecName.SNAPPY)
@@ -1320,10 +1310,11 @@ object TopicLog {
   }
 
   /** Scan ONE committed parquet file for records with offset in
-    * [fromOffset, toOffset] — parquet-hadoop directly on the driver,
-    * no Spark job. The bounds ride as a FilterPredicate so row groups
-    * outside the span are skipped from their stats (the same
-    * pushdown the DSv2 reader compiles,
+    * [fromOffset, toOffset] — opened as a local file directly on the
+    * driver, no Spark job and no Hadoop FileSystem (0.4-0.7 ms p50 per
+    * 8-record file on a 4-core x86 box, vs 12-14 ms). The bounds ride as
+    * a FilterPredicate so row groups outside the span are skipped from
+    * their stats (the same pushdown the DSv2 reader compiles,
     * sources/GraftTopicSource.scala:416). Timestamp decode handles
     * INT96 and INT64 millis/micros/nanos like the DSv2 reader's
     * (GraftTopicSource.scala:463). */
@@ -1344,11 +1335,11 @@ object TopicLog {
     if (toOffset != Long.MaxValue)
       pred = FilterApi.and(pred,
         FilterApi.ltEq(c, java.lang.Long.valueOf(toOffset)))
-    val reader = ParquetReader.builder(new GroupReadSupport(),
-        new org.apache.hadoop.fs.Path(file.toString))
-      .withConf(directReadConf)
-      .withFilter(FilterCompat.get(pred))
-      .build()
+    val reader = new ParquetReader.Builder[Group](
+        new org.apache.parquet.io.LocalInputFile(file),
+        new org.apache.parquet.conf.PlainParquetConfiguration()) {
+      override protected def getReadSupport() = new GroupReadSupport()
+    }.withFilter(FilterCompat.get(pred)).build()
 
     def tsMillis(g: Group, idx: Int): Long = {
       val prim = g.getType.getType(idx).asPrimitiveType()

@@ -2,7 +2,8 @@ package graft.streaming
 
 import java.io.{DataInputStream, EOFException}
 import java.net.{ServerSocket, Socket, SocketException}
-import java.util.concurrent.Executors
+import java.util.concurrent.{ConcurrentHashMap, Executors}
+import java.util.concurrent.atomic.LongAdder
 
 /** A TCP accept loop serving the Kafka-wire handlers — the
   * Spark-native analog of the reference's connection handler (ref:
@@ -118,6 +119,18 @@ class WireServer(broker: Broker, advertisedHost: String = "127.0.0.1",
   }
 
   def boundPort: Int = server.getLocalPort
+
+  /** Failed requests by api_key (each closed its connection), and
+    * connections that died outside a request handler (a bad frame
+    * size, an I/O error). Both are also printed to stderr. */
+  private val requestErrorCounts = new ConcurrentHashMap[Int, LongAdder]()
+  private val connectionErrorCount = new LongAdder()
+
+  def requestErrors: Map[Int, Long] = {
+    import scala.jdk.CollectionConverters._
+    requestErrorCounts.asScala.map { case (k, n) => k -> n.sum() }.toMap
+  }
+  def connectionErrors: Long = connectionErrorCount.sum()
 
   /** Tick state: next due time + in-flight guard so a slow retention
     * pass (it runs Spark jobs) never stacks behind itself. */
@@ -356,6 +369,7 @@ class WireServer(broker: Broker, advertisedHost: String = "127.0.0.1",
             }
           } catch {
             case e: Exception =>
+              requestErrorCounts.computeIfAbsent(apiKey, _ => new LongAdder()).increment()
               System.err.println(s"graft WireServer request error (api_key $apiKey): $e")
               open = false
           }
@@ -365,6 +379,7 @@ class WireServer(broker: Broker, advertisedHost: String = "127.0.0.1",
       case _: EOFException => () // client closed between frames
       case _: SocketException => ()
       case e: Exception =>
+        connectionErrorCount.increment()
         System.err.println(s"graft WireServer connection error: $e")
     } finally sock.close()
   }

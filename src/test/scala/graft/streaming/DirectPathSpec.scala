@@ -8,7 +8,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.TestSpark
 
 /** The driver-direct storage paths (no Spark job): `produceDirect`
-  * (parquet-hadoop writer + the same CAS commit as produce()) and
+  * (local-file parquet writer + the same CAS commit as produce()) and
   * `consumeDirect`/`consumeForWire` (manifest-range-pruned parquet
   * reads). The invariant under test is INTERCHANGEABILITY: records
   * written by either path read identically through BOTH the Spark
@@ -204,5 +204,103 @@ class DirectPathSpec extends AnyFunSuite {
     }
     assert(log.logEndOffsets().getOrElse(0, 0L) === 0L)
     assert(log.read().count() === 0L)
+  }
+
+  /** Comparable form of a direct read: arrays become strings. */
+  private def asTuples(rs: Seq[TopicLog.DirectRecord]) =
+    rs.map { r =>
+      def str(b: Array[Byte]) = Option(b).map(new String(_, "UTF-8"))
+      (r.offset, r.timestampMs, str(r.key), str(r.value),
+        r.headers.map { case (k, v) => (k, str(v)) })
+    }
+
+  test("offsetRangeOf reads the exact range of direct and Spark (INT96) files") {
+    import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
+    val root = tmpRoot()
+    val log = TopicLog.create(spark, root, "d8", 1)
+    log.produceDirect(directRows(0 until 4))
+    log.produce(
+      (0 until 6).toDF("i").select(
+        concat(lit("sk"), col("i")).cast("binary").as("key"),
+        concat(lit("sv"), col("i")).cast("binary").as("value"),
+        lit(new java.sql.Timestamp(1700000100000L)).as("ts")),
+      Partitioners.byLongKey(1, lit(0L)))
+    log.produceDirect(directRows(10 until 17))
+    val dd = java.nio.file.Paths.get(log.dataDir)
+    val files = TopicLog.manifestFiles(log.topicDir).get.map(dd.resolve(_))
+    val (direct, sparkWritten) =
+      files.partition(_.getFileName.toString.startsWith("part-direct-"))
+    assert(direct.map(TopicLog.offsetRangeOf).toSet === Set((0L, 3L), (10L, 16L)))
+    assert(sparkWritten.map(TopicLog.offsetRangeOf) === Seq((4L, 9L)))
+    // the Spark-written file really is the INT96 vintage
+    val r = org.apache.parquet.hadoop.ParquetFileReader.open(
+      new org.apache.parquet.io.LocalInputFile(sparkWritten.head))
+    try {
+      val schema = r.getFooter.getFileMetaData.getSchema
+      assert(schema.getType(schema.getFieldIndex("ts"))
+        .asPrimitiveType.getPrimitiveTypeName === PrimitiveTypeName.INT96)
+    } finally r.close()
+    // a file written outside any log: offsets need not start at 0
+    val loose = Files.createTempDirectory("graft-direct-file").resolve("f.parquet")
+    TopicLog.writeDirect(loose, directRows(0 until 5).iterator.zipWithIndex
+      .map { case ((_, k, v, h, ts), i) => (1000L + 3 * i, k, v, h, ts) })
+    assert(TopicLog.offsetRangeOf(loose) === ((1000L, 1012L)))
+  }
+
+  test("compactFiles keeps exactly the records consumeDirect served before it") {
+    val root = tmpRoot()
+    val log = TopicLog.create(spark, root, "d9", 2)
+    (0 until 3).foreach { b =>
+      log.produceDirect(directRows(b * 5 until (b + 1) * 5, p = 0) ++
+        directRows(b * 3 until (b + 1) * 3, p = 1))
+    }
+    log.produce(
+      (0 until 6).toDF("i").select(col("i"),
+        concat(lit("k"), col("i")).cast("binary").as("key"),
+        concat(lit("v"), col("i")).cast("binary").as("value"),
+        lit(new java.sql.Timestamp(1700000200000L)).as("ts")),
+      Partitioners.byLongKey(2, col("i")))
+    val ends = log.logEndOffsets()
+    assert(ends === Map(0 -> 18L, 1 -> 12L))
+    val before = (0 until 2).map(p => asTuples(log.consumeDirect(p, 0, 1000).get))
+    val filesBefore = TopicLog.manifestFiles(log.topicDir).get.size
+
+    log.compactFiles()
+
+    assert(TopicLog.manifestFiles(log.topicDir).get.size < filesBefore)
+    assert(log.logEndOffsets() === ends)
+    val after = (0 until 2).map(p => asTuples(log.consumeDirect(p, 0, 1000).get))
+    assert(after === before)
+    assert(after.map(_.map(_._1)) === Seq((0L until 18L), (0L until 12L)))
+    // the rewritten files' manifest ranges cover each partition exactly
+    val ranges = TopicLog.manifestRanges(log.topicDir)
+    (0 until 2).foreach { p =>
+      val rs = ranges.collect { case (rel, r) if rel.startsWith(s"partition=$p/") => r }
+      assert(rs.map(_._1).min === 0L && rs.map(_._2).max === ends(p) - 1)
+    }
+    // a window inside the compacted log reads the same slice as before
+    assert(asTuples(log.consumeDirect(0, 6, 5).get) === before(0).slice(6, 11))
+  }
+
+  test("readDirect honours both offset bounds on a direct-written file") {
+    val file = Files.createTempDirectory("graft-direct-file").resolve("f.parquet")
+    TopicLog.writeDirect(file, directRows(0 until 20).iterator.zipWithIndex
+      .map { case ((_, k, v, h, ts), i) => (100L + i, k, v, h, ts) })
+    def offsets(from: Long, to: Long) = TopicLog.readDirect(file, from, to).map(_.offset)
+    assert(offsets(105, 110) === (105L to 110L))
+    assert(offsets(115, Long.MaxValue) === (115L to 119L))
+    assert(offsets(0, 102) === Seq(100L, 101L, 102L))
+    assert(offsets(119, 500) === Seq(119L))
+    assert(offsets(107, 107) === Seq(107L))
+    assert(offsets(0, 99).isEmpty)
+    assert(offsets(120, Long.MaxValue).isEmpty)
+    assert(offsets(110, 105).isEmpty)
+    // the records inside the window are the ones written there
+    val r = TopicLog.readDirect(file, 103, 103).head
+    assert(new String(r.key, "UTF-8") === "k3")
+    assert(new String(r.value, "UTF-8") === "v3")
+    assert(r.timestampMs === 1700000000003L)
+    assert(r.headers.map(_._1) === Seq("h0", "h1"))
+    assert(r.headers.head._2 === null)
   }
 }

@@ -918,4 +918,40 @@ class WireServerSpec extends AnyFunSuite {
       server.close()
     }
   }
+
+  test("a malformed request and a bad frame size each raise their error counter by one") {
+    val root = Files.createTempDirectory("graft-wireerr").toString
+    val server = new WireServer(new Broker(spark, root)).start()
+    // the server answers either failure by closing the connection
+    def sendUntilClosed(bytes: Array[Byte]): Unit = {
+      val sock = new Socket("127.0.0.1", server.boundPort)
+      try {
+        sock.setSoTimeout(10000)
+        sock.getOutputStream.write(bytes)
+        sock.getOutputStream.flush()
+        assert(sock.getInputStream.read() === -1)
+      } finally sock.close()
+    }
+    try {
+      assert(server.requestErrors === Map.empty)
+      assert(server.connectionErrors === 0L)
+      // a 4-byte Produce frame: api_key 0, version 3, then nothing
+      sendUntilClosed(Array[Byte](0, 0, 0, 4, 0, 0, 0, 3))
+      assert(server.requestErrors === Map(ProduceApiKey -> 1L))
+      assert(server.connectionErrors === 0L)
+      // a negative frame size never reaches a handler
+      sendUntilClosed(Array[Byte](-1, -1, -1, -1))
+      assert(server.connectionErrors === 1L)
+      assert(server.requestErrors === Map(ProduceApiKey -> 1L))
+      // the listener keeps serving, and a good request counts nothing
+      val sock = new Socket("127.0.0.1", server.boundPort)
+      try {
+        val apis = decodeApiVersionsResponseV3(exchange(sock,
+          encodeApiVersionsRequestV3(1, "cli", "graft-test", "0")))
+        assert(apis.correlationId === 1)
+      } finally sock.close()
+      assert(server.requestErrors === Map(ProduceApiKey -> 1L))
+      assert(server.connectionErrors === 1L)
+    } finally server.close()
+  }
 }
