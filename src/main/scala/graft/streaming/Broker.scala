@@ -266,7 +266,7 @@ class Broker(spark: SparkSession, root: String) {
     * prototype serves key 18 only; graft serves the full core set). */
   def apiVersions: DataFrame = {
     import spark.implicits._
-    Broker.SupportedApis.toDF("api_key", "api_name", "min_version", "max_version")
+    Broker.WireApis.toDF("api_key", "api_name", "min_version", "max_version")
   }
 
   /** Export a topic to a text-format sink (Kafka-Connect file-sink
@@ -3939,10 +3939,6 @@ object Broker {
     * every supported operation is authorized. */
   val GroupAuthorizedOperations: Int = (1 << 3) | (1 << 6) | (1 << 8)
 
-  // SupportedApis (the catalog the oracle-checked broker_api_versions
-  // query serves) is defined BELOW WireApis, which it derives from —
-  // object vals initialize in declaration order.
-
   val DefaultMaxMessageBytes: Int = 64 * 1024 * 1024
 
   /** The `compression.type` value set, mapped to wire codec ids;
@@ -4026,16 +4022,17 @@ object Broker {
     }.orNull
   }
 
-  /** What the TCP [[WireServer]] actually speaks: ONLY dispatchable
-    * keys, at ONLY their implemented versions. A conformant client
-    * picks the highest mutually supported version from this response
-    * — advertising the broader [[SupportedApis]] (library-analog
-    * surface, versions we never decode) would steer every client
-    * straight into a version we reject. Produce spans 0–9 and Fetch
-    * 0–12 — contiguous through the flexible (KIP-482) encodings, so
-    * a modern client negotiates its preferred version and gets
-    * magic-2 batches (headers included) end-to-end, with KIP-227
-    * incremental fetch sessions served at v7+. */
+  /** The one API catalog: what the TCP [[WireServer]] actually
+    * speaks — ONLY dispatchable keys, at ONLY their implemented
+    * versions. ApiVersions answers with it, and the oracle-checked
+    * `broker_api_versions` query serves it. A conformant client picks
+    * the highest mutually supported version from this response, so a
+    * version no code path decodes would steer it straight into a
+    * rejection. Produce spans 0–9 and Fetch 0–16 — contiguous through
+    * the flexible (KIP-482) encodings, so a modern client negotiates
+    * its preferred version and gets magic-2 batches (headers
+    * included) end-to-end, with KIP-227 incremental fetch sessions
+    * served at v7+. */
   val WireApis: Seq[(Int, String, Int, Int)] = Seq(
     (0, "Produce", 0, KafkaWire.ProduceMaxVersion),
     (1, "Fetch", 0, KafkaWire.FetchMaxVersion),
@@ -4121,13 +4118,4 @@ object Broker {
       KafkaWire.AlterShareGroupOffsetsMaxVersion),
     (92, "DeleteShareGroupOffsets", 0,
       KafkaWire.DeleteShareGroupOffsetsMaxVersion))
-
-  /** The ApiVersions-analog catalog the oracle-checked
-    * `broker_api_versions` query serves. IDENTICAL to [[WireApis]] by
-    * construction: the catalog must never claim a version no code path
-    * decodes (it used to advertise Fetch ≤ 13 while the wire decoder
-    * required ≤ 12 — a reader planning against the catalog would pick
-    * versions the engine rejects). Every graft API is wire-served, so
-    * there is no library-only remainder to union in. */
-  val SupportedApis: Seq[(Int, String, Int, Int)] = WireApis
 }

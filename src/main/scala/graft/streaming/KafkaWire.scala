@@ -4,25 +4,23 @@ import java.io.ByteArrayOutputStream
 import java.nio.ByteBuffer
 import java.nio.charset.StandardCharsets.UTF_8
 
-/** Kafka wire-protocol codecs for the ApiVersions exchange — the one
-  * API the reference broker actually implements — plus Metadata v0,
-  * the next API on its dispatch table (ref:
-  * pkg/kafka/kafka_api.go:99 HandleApiVersions, framing in
-  * pkg/kafka/kafka_connectian_handler.go). Byte layout follows the
-  * PUBLIC Kafka protocol spec (flexible versions, KIP-482):
+/** Kafka wire-protocol codecs: one request/response codec pair per
+  * API, each covering every version [[Broker.WireApis]] advertises,
+  * v0 included (ApiVersions still splits v3 from v0–v2). Byte
+  * layouts follow the public Kafka protocol spec.
   *
   *  - frame: INT32 big-endian size prefix (size excludes itself);
-  *  - request header v2: api_key INT16, api_version INT16,
-  *    correlation_id INT32, client_id NULLABLE_STRING (INT16-length),
-  *    tagged-field count UVARINT;
-  *  - ApiVersions v3 request body: client_software_name and
-  *    client_software_version as COMPACT_STRINGs (UVARINT length+1),
-  *    tagged fields;
-  *  - ApiVersions v3 response: header v0 (correlation_id only — the
-  *    protocol special-cases ApiVersions responses so old clients can
-  *    parse errors), then error_code INT16, api_keys COMPACT_ARRAY of
-  *    (api_key INT16, min INT16, max INT16, tags), throttle_time_ms
-  *    INT32, tags.
+  *  - headers: requests carry header v1 (api_key, api_version,
+  *    correlation_id, client_id NULLABLE_STRING) below an API's
+  *    flexible floor and header v2 (plus a tag buffer) from it;
+  *    responses carry header v0 (correlation_id) or v1 (plus a tag
+  *    buffer) the same way — except ApiVersions, whose response
+  *    header is always v0 so old clients can parse the error;
+  *  - flexible versions (KIP-482): COMPACT strings, arrays and bytes
+  *    (UVARINT length+1) and tagged-field blocks. One body walk
+  *    serves both encodings through the `WR`/`RD` field codecs;
+  *  - record payloads: RecordBatch v2 (magic 2; Produce v3+, Fetch
+  *    v4+) or, below that, the legacy message sets (magic 0/1).
   */
 object KafkaWire {
 
@@ -348,11 +346,14 @@ object KafkaWire {
         errorCode = 35)
   }
 
-  // --- Metadata v0 (api_key 3, pre-flexible encoding) ---
+  // --- Metadata (api_key 3): the v0 layout, which the version deltas
+  // below build on ---
   // Request header v1 (api_key, api_version, correlation_id,
   // client_id NULLABLE_STRING), response header v0 (correlation_id).
   // Body layouts per the public Kafka protocol spec:
-  //   request:  topics ARRAY<STRING> (count -1 = null = all topics)
+  //   request:  topics ARRAY<STRING> (not nullable at v0: an EMPTY
+  //             array = all topics; the decoder also reads a
+  //             count of -1 as "all", for lenient v0 clients)
   //   response: brokers ARRAY<node_id INT32, host STRING, port INT32>,
   //             topics ARRAY<error INT16, name STRING,
   //               partitions ARRAY<error INT16, index INT32,
@@ -373,92 +374,7 @@ object KafkaWire {
   case class MetadataResponse(correlationId: Int,
       brokers: Seq[(Int, String, Int)], topics: Seq[TopicMetadata])
 
-  private def writeInt32Array(out: ByteArrayOutputStream, xs: Seq[Int]): Unit = {
-    writeInt32(out, xs.length)
-    xs.foreach(writeInt32(out, _))
-  }
-
-  private def readInt32Array(buf: ByteBuffer): Seq[Int] = {
-    val n = buf.getInt
-    (0 until n).map(_ => buf.getInt)
-  }
-
-  /** Client-side encode of a framed Metadata v0 request. */
-  def encodeMetadataRequestV0(correlationId: Int, clientId: String,
-      topics: Option[Seq[String]]): Array[Byte] = {
-    val out = new ByteArrayOutputStream()
-    writeInt16(out, MetadataApiKey) // header v1
-    writeInt16(out, 0)
-    writeInt32(out, correlationId)
-    writeNullableString(out, clientId)
-    topics match {
-      case None => writeInt32(out, -1) // null array = all topics
-      case Some(ts) =>
-        writeInt32(out, ts.length)
-        ts.foreach(writeNullableString(out, _))
-    }
-    frame(out.toByteArray)
-  }
-
-  /** Server-side decode of a framed Metadata v0 request. */
-  def decodeMetadataRequestV0(bytes: Array[Byte]): MetadataRequest = {
-    val buf = unframe(bytes)
-    val apiKey = buf.getShort.toInt
-    require(apiKey == MetadataApiKey, s"api key $apiKey is not Metadata")
-    require(buf.getShort.toInt == 0, "only Metadata v0 supported")
-    val correlationId = buf.getInt
-    val clientId = readNullableString(buf)
-    val n = buf.getInt
-    val topics = if (n < 0) None
-      else Some((0 until n).map(_ => readNullableString(buf)).toSeq)
-    MetadataRequest(correlationId, clientId, topics)
-  }
-
-  /** Server-side encode of the framed Metadata v0 response. */
-  def encodeMetadataResponseV0(correlationId: Int,
-      brokers: Seq[(Int, String, Int)], topics: Seq[TopicMetadata]): Array[Byte] = {
-    val out = new ByteArrayOutputStream()
-    writeInt32(out, correlationId) // response header v0
-    writeInt32(out, brokers.length)
-    brokers.foreach { case (id, host, port) =>
-      writeInt32(out, id); writeNullableString(out, host); writeInt32(out, port)
-    }
-    writeInt32(out, topics.length)
-    topics.foreach { t =>
-      writeInt16(out, t.errorCode)
-      writeNullableString(out, t.name)
-      writeInt32(out, t.partitions.length)
-      t.partitions.foreach { p =>
-        writeInt16(out, p.errorCode)
-        writeInt32(out, p.index)
-        writeInt32(out, p.leader)
-        writeInt32Array(out, p.replicas)
-        writeInt32Array(out, p.isr)
-      }
-    }
-    frame(out.toByteArray)
-  }
-
-  /** Client-side decode (round-trip check). */
-  def decodeMetadataResponseV0(bytes: Array[Byte]): MetadataResponse = {
-    val buf = unframe(bytes)
-    val correlationId = buf.getInt
-    val brokers = (0 until buf.getInt).map { _ =>
-      (buf.getInt, readNullableString(buf), buf.getInt)
-    }
-    val topics = (0 until buf.getInt).map { _ =>
-      val err = buf.getShort.toInt
-      val name = readNullableString(buf)
-      val parts = (0 until buf.getInt).map { _ =>
-        PartitionMetadata(buf.getShort.toInt, buf.getInt, buf.getInt,
-          readInt32Array(buf), readInt32Array(buf))
-      }
-      TopicMetadata(err, name, parts)
-    }
-    MetadataResponse(correlationId, brokers, topics)
-  }
-
-  // --- Metadata v1–v12 (flexible/KIP-482 at v9+) ---
+  // --- Metadata v0–v12 (flexible/KIP-482 at v9+) ---
   // Version deltas per the public spec:
   //   request:  v0 treats an EMPTY topics array as "all topics"; v1+
   //     moves "all" to the NULL array (-1) and empty means "none";
@@ -668,7 +584,8 @@ object KafkaWire {
       Seq((0, host, port)), "graft", topics)
   }
 
-  // --- Produce v0 / Fetch v0 (api_keys 0/1, message format v0) ---
+  // --- Produce / Fetch (api_keys 0/1): the v0 layouts and message
+  // format v0, which the versioned codecs below build on ---
   // MessageSet v0 (no element count — a byte-bounded concatenation):
   //   [offset INT64, message_size INT32, message]*
   // Message v0: crc INT32 (CRC32 over magic..value), magic INT8 = 0,
@@ -690,14 +607,6 @@ object KafkaWire {
   val FetchApiKey = 1
 
   case class WireRecord(key: Array[Byte], value: Array[Byte])
-
-  case class ProduceRequestV0(correlationId: Int, clientId: String,
-      acks: Int, timeoutMs: Int,
-      topics: Seq[(String, Seq[(Int, Seq[WireRecord])])])
-
-  case class FetchRequestV0(correlationId: Int, clientId: String,
-      maxWaitMs: Int, minBytes: Int,
-      topics: Seq[(String, Seq[(Int, Long, Int)])])
 
   private def writeInt64(out: ByteArrayOutputStream, v: Long): Unit = {
     var i = 56
@@ -790,160 +699,8 @@ object KafkaWire {
     out.result()
   }
 
-  def encodeProduceRequestV0(correlationId: Int, clientId: String, acks: Int,
-      timeoutMs: Int,
-      topics: Seq[(String, Seq[(Int, Seq[WireRecord])])]): Array[Byte] = {
-    val out = new ByteArrayOutputStream()
-    writeInt16(out, ProduceApiKey) // header v1
-    writeInt16(out, 0)
-    writeInt32(out, correlationId)
-    writeNullableString(out, clientId)
-    writeInt16(out, acks)
-    writeInt32(out, timeoutMs)
-    writeInt32(out, topics.length)
-    topics.foreach { case (name, parts) =>
-      writeNullableString(out, name)
-      writeInt32(out, parts.length)
-      parts.foreach { case (p, records) =>
-        writeInt32(out, p)
-        // producers stamp offset 0 — the broker assigns real offsets
-        val ms = encodeMessageSetV0(records.map(r => (0L, r)))
-        writeInt32(out, ms.length)
-        out.write(ms, 0, ms.length)
-      }
-    }
-    frame(out.toByteArray)
-  }
-
-  def decodeProduceRequestV0(bytes: Array[Byte]): ProduceRequestV0 = {
-    val buf = unframe(bytes)
-    require(buf.getShort.toInt == ProduceApiKey, "not a Produce request")
-    require(buf.getShort.toInt == 0, "only Produce v0 supported")
-    val correlationId = buf.getInt
-    val clientId = readNullableString(buf)
-    val acks = buf.getShort.toInt
-    val timeout = buf.getInt
-    val topics = (0 until buf.getInt).map { _ =>
-      val name = readNullableString(buf)
-      val parts = (0 until buf.getInt).map { _ =>
-        val p = buf.getInt
-        val size = buf.getInt
-        val ms = new Array[Byte](size); buf.get(ms)
-        (p, decodeMessageSetV0(ms).map(_._2))
-      }
-      (name, parts.toSeq)
-    }
-    ProduceRequestV0(correlationId, clientId, acks, timeout, topics.toSeq)
-  }
-
-  def encodeProduceResponseV0(correlationId: Int,
-      results: Seq[(String, Seq[(Int, Int, Long)])]): Array[Byte] = {
-    val out = new ByteArrayOutputStream()
-    writeInt32(out, correlationId)
-    writeInt32(out, results.length)
-    results.foreach { case (name, parts) =>
-      writeNullableString(out, name)
-      writeInt32(out, parts.length)
-      parts.foreach { case (p, err, base) =>
-        writeInt32(out, p); writeInt16(out, err); writeInt64(out, base)
-      }
-    }
-    frame(out.toByteArray)
-  }
-
-  def decodeProduceResponseV0(
-      bytes: Array[Byte]): (Int, Seq[(String, Seq[(Int, Int, Long)])]) = {
-    val buf = unframe(bytes)
-    val correlationId = buf.getInt
-    val topics = (0 until buf.getInt).map { _ =>
-      val name = readNullableString(buf)
-      val parts = (0 until buf.getInt).map { _ =>
-        (buf.getInt, buf.getShort.toInt, buf.getLong)
-      }
-      (name, parts.toSeq)
-    }
-    (correlationId, topics.toSeq)
-  }
-
-  def encodeFetchRequestV0(correlationId: Int, clientId: String,
-      maxWaitMs: Int, minBytes: Int,
-      topics: Seq[(String, Seq[(Int, Long, Int)])]): Array[Byte] = {
-    val out = new ByteArrayOutputStream()
-    writeInt16(out, FetchApiKey) // header v1
-    writeInt16(out, 0)
-    writeInt32(out, correlationId)
-    writeNullableString(out, clientId)
-    writeInt32(out, -1) // replica_id: -1 = consumer
-    writeInt32(out, maxWaitMs)
-    writeInt32(out, minBytes)
-    writeInt32(out, topics.length)
-    topics.foreach { case (name, parts) =>
-      writeNullableString(out, name)
-      writeInt32(out, parts.length)
-      parts.foreach { case (p, off, maxBytes) =>
-        writeInt32(out, p); writeInt64(out, off); writeInt32(out, maxBytes)
-      }
-    }
-    frame(out.toByteArray)
-  }
-
-  def decodeFetchRequestV0(bytes: Array[Byte]): FetchRequestV0 = {
-    val buf = unframe(bytes)
-    require(buf.getShort.toInt == FetchApiKey, "not a Fetch request")
-    require(buf.getShort.toInt == 0, "only Fetch v0 supported")
-    val correlationId = buf.getInt
-    val clientId = readNullableString(buf)
-    buf.getInt // replica_id
-    val maxWait = buf.getInt
-    val minBytes = buf.getInt
-    val topics = (0 until buf.getInt).map { _ =>
-      val name = readNullableString(buf)
-      val parts = (0 until buf.getInt).map { _ =>
-        (buf.getInt, buf.getLong, buf.getInt)
-      }
-      (name, parts.toSeq)
-    }
-    FetchRequestV0(correlationId, clientId, maxWait, minBytes, topics.toSeq)
-  }
-
-  def encodeFetchResponseV0(correlationId: Int,
-      topics: Seq[(String, Seq[(Int, Int, Long, Seq[(Long, WireRecord)])])]): Array[Byte] = {
-    val out = new ByteArrayOutputStream()
-    writeInt32(out, correlationId)
-    writeInt32(out, topics.length)
-    topics.foreach { case (name, parts) =>
-      writeNullableString(out, name)
-      writeInt32(out, parts.length)
-      parts.foreach { case (p, err, hw, records) =>
-        writeInt32(out, p); writeInt16(out, err); writeInt64(out, hw)
-        val ms = encodeMessageSetV0(records)
-        writeInt32(out, ms.length)
-        out.write(ms, 0, ms.length)
-      }
-    }
-    frame(out.toByteArray)
-  }
-
-  def decodeFetchResponseV0(bytes: Array[Byte])
-      : (Int, Seq[(String, Seq[(Int, Int, Long, Seq[(Long, WireRecord)])])]) = {
-    val buf = unframe(bytes)
-    val correlationId = buf.getInt
-    val topics = (0 until buf.getInt).map { _ =>
-      val name = readNullableString(buf)
-      val parts = (0 until buf.getInt).map { _ =>
-        val p = buf.getInt
-        val err = buf.getShort.toInt
-        val hw = buf.getLong
-        val size = buf.getInt
-        val ms = new Array[Byte](size); buf.get(ms)
-        (p, err, hw, decodeMessageSetV0(ms))
-      }
-      (name, parts.toSeq)
-    }
-    (correlationId, topics.toSeq)
-  }
-
-  // --- OffsetCommit v0 / OffsetFetch v0 (api_keys 8/9) ---
+  // --- OffsetCommit / OffsetFetch (api_keys 8/9): the v0 layouts; the
+  // codecs are with the coordinator APIs below ---
   // OffsetCommit v0 request: group STRING, topics ARRAY<name STRING,
   //   partitions ARRAY<partition INT32, offset INT64,
   //   metadata NULLABLE_STRING>>; response: topics ARRAY<name,
@@ -956,68 +713,8 @@ object KafkaWire {
   val OffsetCommitApiKey = 8
   val OffsetFetchApiKey = 9
 
-  def encodeOffsetCommitRequestV0(correlationId: Int, clientId: String,
-      group: String, topics: Seq[(String, Seq[(Int, Long, String)])]): Array[Byte] = {
-    val out = new ByteArrayOutputStream()
-    writeInt16(out, OffsetCommitApiKey) // header v1
-    writeInt16(out, 0)
-    writeInt32(out, correlationId)
-    writeNullableString(out, clientId)
-    writeNullableString(out, group)
-    writeInt32(out, topics.length)
-    topics.foreach { case (name, parts) =>
-      writeNullableString(out, name)
-      writeInt32(out, parts.length)
-      parts.foreach { case (p, off, meta) =>
-        writeInt32(out, p); writeInt64(out, off); writeNullableString(out, meta)
-      }
-    }
-    frame(out.toByteArray)
-  }
-
-  def decodeOffsetCommitResponseV0(
-      bytes: Array[Byte]): (Int, Seq[(String, Seq[(Int, Int)])]) = {
-    val buf = unframe(bytes)
-    val correlationId = buf.getInt
-    val topics = (0 until buf.getInt).map { _ =>
-      val name = readNullableString(buf)
-      val parts = (0 until buf.getInt).map(_ => (buf.getInt, buf.getShort.toInt))
-      (name, parts.toSeq)
-    }
-    (correlationId, topics.toSeq)
-  }
-
-  def encodeOffsetFetchRequestV0(correlationId: Int, clientId: String,
-      group: String, topics: Seq[(String, Seq[Int])]): Array[Byte] = {
-    val out = new ByteArrayOutputStream()
-    writeInt16(out, OffsetFetchApiKey) // header v1
-    writeInt16(out, 0)
-    writeInt32(out, correlationId)
-    writeNullableString(out, clientId)
-    writeNullableString(out, group)
-    writeInt32(out, topics.length)
-    topics.foreach { case (name, parts) =>
-      writeNullableString(out, name)
-      writeInt32Array(out, parts)
-    }
-    frame(out.toByteArray)
-  }
-
-  def decodeOffsetFetchResponseV0(
-      bytes: Array[Byte]): (Int, Seq[(String, Seq[(Int, Long, String, Int)])]) = {
-    val buf = unframe(bytes)
-    val correlationId = buf.getInt
-    val topics = (0 until buf.getInt).map { _ =>
-      val name = readNullableString(buf)
-      val parts = (0 until buf.getInt).map { _ =>
-        (buf.getInt, buf.getLong, readNullableString(buf), buf.getShort.toInt)
-      }
-      (name, parts.toSeq)
-    }
-    (correlationId, topics.toSeq)
-  }
-
-  // --- ListOffsets v0 (api_key 2) ---
+  // --- ListOffsets (api_key 2): the v0 layout; the codec is with the
+  // coordinator APIs below ---
   // Request (header v1): replica_id INT32, topics ARRAY<name STRING,
   //   partitions ARRAY<partition INT32, timestamp INT64,
   //   max_num_offsets INT32>>; timestamp -1 = LATEST, -2 = EARLIEST.
@@ -1026,43 +723,7 @@ object KafkaWire {
 
   val ListOffsetsApiKey = 2
 
-  def encodeListOffsetsRequestV0(correlationId: Int, clientId: String,
-      topics: Seq[(String, Seq[(Int, Long, Int)])]): Array[Byte] = {
-    val out = new ByteArrayOutputStream()
-    writeInt16(out, ListOffsetsApiKey) // header v1
-    writeInt16(out, 0)
-    writeInt32(out, correlationId)
-    writeNullableString(out, clientId)
-    writeInt32(out, -1) // replica_id: consumer
-    writeInt32(out, topics.length)
-    topics.foreach { case (name, parts) =>
-      writeNullableString(out, name)
-      writeInt32(out, parts.length)
-      parts.foreach { case (p, ts, maxN) =>
-        writeInt32(out, p); writeInt64(out, ts); writeInt32(out, maxN)
-      }
-    }
-    frame(out.toByteArray)
-  }
-
-  def decodeListOffsetsResponseV0(
-      bytes: Array[Byte]): (Int, Seq[(String, Seq[(Int, Int, Seq[Long])])]) = {
-    val buf = unframe(bytes)
-    val correlationId = buf.getInt
-    val topics = (0 until buf.getInt).map { _ =>
-      val name = readNullableString(buf)
-      val parts = (0 until buf.getInt).map { _ =>
-        val p = buf.getInt
-        val err = buf.getShort.toInt
-        val offs = (0 until buf.getInt).map(_ => buf.getLong)
-        (p, err, offs.toSeq)
-      }
-      (name, parts.toSeq)
-    }
-    (correlationId, topics.toSeq)
-  }
-
-  // --- Produce v1–v9 / Fetch v1–v12 (versioned bodies, flexible
+  // --- Produce v0–v9 / Fetch v0–v16 (versioned bodies, flexible
   // encodings at v9/v12 per KIP-482) ---
   // Version deltas per the public spec:
   //   Produce request:  v3 prepends transactional_id; the partition
@@ -1631,7 +1292,7 @@ object KafkaWire {
     (correlationId, errorCode, sessionId, topics.toSeq)
   }
 
-  // --- Group membership v0 (JoinGroup 11, Heartbeat 12, LeaveGroup
+  // --- Group membership (JoinGroup 11, Heartbeat 12, LeaveGroup
   // 13, SyncGroup 14) — the classic consumer-group protocol. The
   // BROKER only brokers metadata: members ship opaque protocol
   // metadata at join, the elected LEADER member computes assignments
@@ -1643,111 +1304,11 @@ object KafkaWire {
   val LeaveGroupApiKey = 13
   val SyncGroupApiKey = 14
 
-  case class JoinGroupResponseV0(correlationId: Int, errorCode: Int,
-      generationId: Int, protocol: String, leaderId: String,
-      memberId: String, members: Seq[(String, Array[Byte])])
-
-  def encodeJoinGroupRequestV0(correlationId: Int, clientId: String,
-      group: String, sessionTimeoutMs: Int, memberId: String,
-      protocolType: String, protocols: Seq[(String, Array[Byte])]): Array[Byte] = {
-    val out = new ByteArrayOutputStream()
-    writeInt16(out, JoinGroupApiKey); writeInt16(out, 0)
-    writeInt32(out, correlationId); writeNullableString(out, clientId)
-    writeNullableString(out, group)
-    writeInt32(out, sessionTimeoutMs)
-    writeNullableString(out, memberId)
-    writeNullableString(out, protocolType)
-    writeInt32(out, protocols.length)
-    protocols.foreach { case (n, m) =>
-      writeNullableString(out, n); writeBytesField(out, m)
-    }
-    frame(out.toByteArray)
-  }
-
-  def decodeJoinGroupResponseV0(bytes: Array[Byte]): JoinGroupResponseV0 = {
-    val buf = unframe(bytes)
-    val correlationId = buf.getInt
-    val err = buf.getShort.toInt
-    val gen = buf.getInt
-    val protocol = readNullableString(buf)
-    val leader = readNullableString(buf)
-    val member = readNullableString(buf)
-    val members = (0 until buf.getInt).map { _ =>
-      (readNullableString(buf), readBytesField(buf))
-    }
-    JoinGroupResponseV0(correlationId, err, gen, protocol, leader, member,
-      members.toSeq)
-  }
-
-  def encodeSyncGroupRequestV0(correlationId: Int, clientId: String,
-      group: String, generationId: Int, memberId: String,
-      assignments: Seq[(String, Array[Byte])]): Array[Byte] = {
-    val out = new ByteArrayOutputStream()
-    writeInt16(out, SyncGroupApiKey); writeInt16(out, 0)
-    writeInt32(out, correlationId); writeNullableString(out, clientId)
-    writeNullableString(out, group)
-    writeInt32(out, generationId)
-    writeNullableString(out, memberId)
-    writeInt32(out, assignments.length)
-    assignments.foreach { case (id, a) =>
-      writeNullableString(out, id); writeBytesField(out, a)
-    }
-    frame(out.toByteArray)
-  }
-
-  def decodeSyncGroupResponseV0(bytes: Array[Byte]): (Int, Int, Array[Byte]) = {
-    val buf = unframe(bytes)
-    (buf.getInt, buf.getShort.toInt, readBytesField(buf))
-  }
-
-  /** Heartbeat v0 and LeaveGroup v0 requests share a tiny shape; the
-    * response to both is correlation_id + error_code. */
-  def encodeHeartbeatRequestV0(correlationId: Int, clientId: String,
-      group: String, generationId: Int, memberId: String): Array[Byte] = {
-    val out = new ByteArrayOutputStream()
-    writeInt16(out, HeartbeatApiKey); writeInt16(out, 0)
-    writeInt32(out, correlationId); writeNullableString(out, clientId)
-    writeNullableString(out, group)
-    writeInt32(out, generationId)
-    writeNullableString(out, memberId)
-    frame(out.toByteArray)
-  }
-
-  def encodeLeaveGroupRequestV0(correlationId: Int, clientId: String,
-      group: String, memberId: String): Array[Byte] = {
-    val out = new ByteArrayOutputStream()
-    writeInt16(out, LeaveGroupApiKey); writeInt16(out, 0)
-    writeInt32(out, correlationId); writeNullableString(out, clientId)
-    writeNullableString(out, group)
-    writeNullableString(out, memberId)
-    frame(out.toByteArray)
-  }
-
-  def decodeErrorResponse(bytes: Array[Byte]): (Int, Int) = {
-    val buf = unframe(bytes)
-    (buf.getInt, buf.getShort.toInt)
-  }
-
-  // --- FindCoordinator v0 (api_key 10) — the lookup every real
+  // --- FindCoordinator (api_key 10) — the lookup every real
   // client performs before ANY group RPC (offsets or membership);
   // a single-broker graft always answers itself. ---
 
   val FindCoordinatorApiKey = 10
-
-  def encodeFindCoordinatorRequestV0(correlationId: Int, clientId: String,
-      group: String): Array[Byte] = {
-    val out = new ByteArrayOutputStream()
-    writeInt16(out, FindCoordinatorApiKey); writeInt16(out, 0)
-    writeInt32(out, correlationId); writeNullableString(out, clientId)
-    writeNullableString(out, group)
-    frame(out.toByteArray)
-  }
-
-  def decodeFindCoordinatorResponseV0(
-      bytes: Array[Byte]): (Int, Int, Int, String, Int) = {
-    val buf = unframe(bytes)
-    (buf.getInt, buf.getShort.toInt, buf.getInt, readNullableString(buf), buf.getInt)
-  }
 
   // --- Modern versions of the coordinator / group / offset APIs ---
   // The version families a current off-the-shelf client (Java
@@ -2700,7 +2261,7 @@ object KafkaWire {
     (correlationId, err, members)
   }
 
-  // --- Group/topic admin v0 (DescribeGroups 15, ListGroups 16,
+  // --- Group/topic admin APIs (DescribeGroups 15, ListGroups 16,
   // CreateTopics 19, DeleteTopics 20, DeleteRecords 21) ---
 
   val DescribeGroupsApiKey = 15
@@ -2709,114 +2270,14 @@ object KafkaWire {
   val DeleteTopicsApiKey = 20
   val DeleteRecordsApiKey = 21
 
-  def encodeListGroupsRequestV0(correlationId: Int, clientId: String): Array[Byte] = {
-    val out = new ByteArrayOutputStream()
-    writeInt16(out, ListGroupsApiKey); writeInt16(out, 0)
-    writeInt32(out, correlationId); writeNullableString(out, clientId)
-    frame(out.toByteArray)
-  }
-
-  def decodeListGroupsRequestV0(bytes: Array[Byte]): Int = {
-    val buf = unframe(bytes)
-    require(buf.getShort.toInt == ListGroupsApiKey, "not a ListGroups request")
-    require(buf.getShort.toInt == 0, "only ListGroups v0 supported")
-    val correlationId = buf.getInt
-    readNullableString(buf) // client_id
-    correlationId
-  }
-
-  def encodeListGroupsResponseV0(correlationId: Int, errorCode: Int,
-      groups: Seq[(String, String)]): Array[Byte] = {
-    val out = new ByteArrayOutputStream()
-    writeInt32(out, correlationId)
-    writeInt16(out, errorCode)
-    writeInt32(out, groups.length)
-    groups.foreach { case (g, pt) =>
-      writeNullableString(out, g); writeNullableString(out, pt)
-    }
-    frame(out.toByteArray)
-  }
-
-  def decodeListGroupsResponseV0(bytes: Array[Byte]): (Int, Int, Seq[(String, String)]) = {
-    val buf = unframe(bytes)
-    val correlationId = buf.getInt
-    val err = buf.getShort.toInt
-    val groups = (0 until buf.getInt).map { _ =>
-      (readNullableString(buf), readNullableString(buf))
-    }
-    (correlationId, err, groups.toSeq)
-  }
-
   case class DescribedGroup(errorCode: Int, group: String, state: String,
       protocolType: String, protocol: String,
       members: Seq[(String, String, String, Array[Byte], Array[Byte])])
 
-  def encodeDescribeGroupsRequestV0(correlationId: Int, clientId: String,
-      groups: Seq[String]): Array[Byte] = {
-    val out = new ByteArrayOutputStream()
-    writeInt16(out, DescribeGroupsApiKey); writeInt16(out, 0)
-    writeInt32(out, correlationId); writeNullableString(out, clientId)
-    writeInt32(out, groups.length)
-    groups.foreach(writeNullableString(out, _))
-    frame(out.toByteArray)
-  }
-
-  def decodeDescribeGroupsRequestV0(bytes: Array[Byte]): (Int, Seq[String]) = {
-    val buf = unframe(bytes)
-    require(buf.getShort.toInt == DescribeGroupsApiKey, "not a DescribeGroups request")
-    require(buf.getShort.toInt == 0, "only DescribeGroups v0 supported")
-    val correlationId = buf.getInt
-    readNullableString(buf) // client_id
-    val groups = (0 until buf.getInt).map(_ => readNullableString(buf))
-    (correlationId, groups.toSeq)
-  }
-
-  def encodeDescribeGroupsResponseV0(correlationId: Int,
-      groups: Seq[DescribedGroup]): Array[Byte] = {
-    val out = new ByteArrayOutputStream()
-    writeInt32(out, correlationId)
-    writeInt32(out, groups.length)
-    groups.foreach { g =>
-      writeInt16(out, g.errorCode)
-      writeNullableString(out, g.group)
-      writeNullableString(out, g.state)
-      writeNullableString(out, g.protocolType)
-      writeNullableString(out, g.protocol)
-      writeInt32(out, g.members.length)
-      g.members.foreach { case (id, clientId, host, meta, assignment) =>
-        writeNullableString(out, id)
-        writeNullableString(out, clientId)
-        writeNullableString(out, host)
-        writeBytesField(out, meta)
-        writeBytesField(out, assignment)
-      }
-    }
-    frame(out.toByteArray)
-  }
-
-  def decodeDescribeGroupsResponseV0(bytes: Array[Byte]): (Int, Seq[DescribedGroup]) = {
-    val buf = unframe(bytes)
-    val correlationId = buf.getInt
-    val groups = (0 until buf.getInt).map { _ =>
-      val err = buf.getShort.toInt
-      val g = readNullableString(buf)
-      val state = readNullableString(buf)
-      val pt = readNullableString(buf)
-      val proto = readNullableString(buf)
-      val members = (0 until buf.getInt).map { _ =>
-        (readNullableString(buf), readNullableString(buf), readNullableString(buf),
-          readBytesField(buf), readBytesField(buf))
-      }
-      DescribedGroup(err, g, state, pt, proto, members.toSeq)
-    }
-    (correlationId, groups.toSeq)
-  }
-
   // --- ListGroups v0–v5 (KIP-518 states filter at v4, KIP-848 group
   // types at v5; flexible v3+) and DescribeGroups v0–v5 (throttle v1+,
   // authorized_operations v3+, group_instance_id v4+, flexible v5) —
-  // the versions kafka-clients 3.x/4.x AdminClient actually sends.
-  // The *V0 codecs above remain for the golden-frame specs. ---
+  // the versions kafka-clients 3.x/4.x AdminClient actually sends. ---
 
   val ListGroupsMaxVersion = 5
   val DescribeGroupsMaxVersion = 5
@@ -3015,7 +2476,7 @@ object KafkaWire {
   // — the versions AdminClient and kafka-topics.sh actually send
   // (CreateTopics flexible v5+ with response configs, topic_id v7;
   // DeleteTopics flexible v4+, topic-id keying v6; DeleteRecords
-  // flexible v2). The *V0 codecs above stay for the golden specs. ---
+  // flexible v2). ---
 
   val CreateTopicsMaxVersion = 7
   val DeleteTopicsMaxVersion = 6
@@ -3347,151 +2808,6 @@ object KafkaWire {
     }.toSeq
     r.tags()
     (correlationId, topics)
-  }
-
-  def encodeCreateTopicsRequestV0(correlationId: Int, clientId: String,
-      topics: Seq[(String, Int, Int)], timeoutMs: Int): Array[Byte] = {
-    val out = new ByteArrayOutputStream()
-    writeInt16(out, CreateTopicsApiKey); writeInt16(out, 0)
-    writeInt32(out, correlationId); writeNullableString(out, clientId)
-    writeInt32(out, topics.length)
-    topics.foreach { case (name, numPartitions, replication) =>
-      writeNullableString(out, name)
-      writeInt32(out, numPartitions)
-      writeInt16(out, replication)
-      writeInt32(out, 0) // replica_assignment: none (auto)
-      writeInt32(out, 0) // config_entries: none
-    }
-    writeInt32(out, timeoutMs)
-    frame(out.toByteArray)
-  }
-
-  def decodeCreateTopicsRequestV0(bytes: Array[Byte]): (Int, Seq[(String, Int, Int)]) = {
-    val buf = unframe(bytes)
-    require(buf.getShort.toInt == CreateTopicsApiKey, "not a CreateTopics request")
-    require(buf.getShort.toInt == 0, "only CreateTopics v0 supported")
-    val correlationId = buf.getInt
-    readNullableString(buf) // client_id
-    val topics = (0 until buf.getInt).map { _ =>
-      val name = readNullableString(buf)
-      val parts = buf.getInt
-      val repl = buf.getShort.toInt
-      (0 until buf.getInt).foreach { _ => // replica_assignment
-        buf.getInt; (0 until buf.getInt).foreach(_ => buf.getInt)
-      }
-      (0 until buf.getInt).foreach { _ => // config_entries
-        readNullableString(buf); readNullableString(buf)
-      }
-      (name, parts, repl)
-    }
-    buf.getInt // timeout
-    (correlationId, topics.toSeq)
-  }
-
-  /** CreateTopics / DeleteTopics v0 responses share one shape:
-    * ARRAY<(topic, error_code)>. */
-  def encodeTopicErrorsResponseV0(correlationId: Int,
-      topics: Seq[(String, Int)]): Array[Byte] = {
-    val out = new ByteArrayOutputStream()
-    writeInt32(out, correlationId)
-    writeInt32(out, topics.length)
-    topics.foreach { case (name, err) =>
-      writeNullableString(out, name); writeInt16(out, err)
-    }
-    frame(out.toByteArray)
-  }
-
-  def decodeTopicErrorsResponseV0(bytes: Array[Byte]): (Int, Seq[(String, Int)]) = {
-    val buf = unframe(bytes)
-    val correlationId = buf.getInt
-    val topics = (0 until buf.getInt).map { _ =>
-      (readNullableString(buf), buf.getShort.toInt)
-    }
-    (correlationId, topics.toSeq)
-  }
-
-  def encodeDeleteTopicsRequestV0(correlationId: Int, clientId: String,
-      topics: Seq[String], timeoutMs: Int): Array[Byte] = {
-    val out = new ByteArrayOutputStream()
-    writeInt16(out, DeleteTopicsApiKey); writeInt16(out, 0)
-    writeInt32(out, correlationId); writeNullableString(out, clientId)
-    writeInt32(out, topics.length)
-    topics.foreach(writeNullableString(out, _))
-    writeInt32(out, timeoutMs)
-    frame(out.toByteArray)
-  }
-
-  def decodeDeleteTopicsRequestV0(bytes: Array[Byte]): (Int, Seq[String]) = {
-    val buf = unframe(bytes)
-    require(buf.getShort.toInt == DeleteTopicsApiKey, "not a DeleteTopics request")
-    require(buf.getShort.toInt == 0, "only DeleteTopics v0 supported")
-    val correlationId = buf.getInt
-    readNullableString(buf) // client_id
-    val topics = (0 until buf.getInt).map(_ => readNullableString(buf))
-    buf.getInt // timeout
-    (correlationId, topics.toSeq)
-  }
-
-  def encodeDeleteRecordsRequestV0(correlationId: Int, clientId: String,
-      topics: Seq[(String, Seq[(Int, Long)])], timeoutMs: Int): Array[Byte] = {
-    val out = new ByteArrayOutputStream()
-    writeInt16(out, DeleteRecordsApiKey); writeInt16(out, 0)
-    writeInt32(out, correlationId); writeNullableString(out, clientId)
-    writeInt32(out, topics.length)
-    topics.foreach { case (name, parts) =>
-      writeNullableString(out, name)
-      writeInt32(out, parts.length)
-      parts.foreach { case (p, off) => writeInt32(out, p); writeInt64(out, off) }
-    }
-    writeInt32(out, timeoutMs)
-    frame(out.toByteArray)
-  }
-
-  def decodeDeleteRecordsRequestV0(bytes: Array[Byte])
-      : (Int, Seq[(String, Seq[(Int, Long)])]) = {
-    val buf = unframe(bytes)
-    require(buf.getShort.toInt == DeleteRecordsApiKey, "not a DeleteRecords request")
-    require(buf.getShort.toInt == 0, "only DeleteRecords v0 supported")
-    val correlationId = buf.getInt
-    readNullableString(buf) // client_id
-    val topics = (0 until buf.getInt).map { _ =>
-      val name = readNullableString(buf)
-      val parts = (0 until buf.getInt).map(_ => (buf.getInt, buf.getLong))
-      (name, parts.toSeq)
-    }
-    buf.getInt // timeout
-    (correlationId, topics.toSeq)
-  }
-
-  def encodeDeleteRecordsResponseV0(correlationId: Int,
-      topics: Seq[(String, Seq[(Int, Long, Int)])]): Array[Byte] = {
-    val out = new ByteArrayOutputStream()
-    writeInt32(out, correlationId)
-    writeInt32(out, 0) // throttle_time_ms
-    writeInt32(out, topics.length)
-    topics.foreach { case (name, parts) =>
-      writeNullableString(out, name)
-      writeInt32(out, parts.length)
-      parts.foreach { case (p, lowWatermark, err) =>
-        writeInt32(out, p); writeInt64(out, lowWatermark); writeInt16(out, err)
-      }
-    }
-    frame(out.toByteArray)
-  }
-
-  def decodeDeleteRecordsResponseV0(bytes: Array[Byte])
-      : (Int, Seq[(String, Seq[(Int, Long, Int)])]) = {
-    val buf = unframe(bytes)
-    val correlationId = buf.getInt
-    buf.getInt // throttle_time_ms
-    val topics = (0 until buf.getInt).map { _ =>
-      val name = readNullableString(buf)
-      val parts = (0 until buf.getInt).map { _ =>
-        (buf.getInt, buf.getLong, buf.getShort.toInt)
-      }
-      (name, parts.toSeq)
-    }
-    (correlationId, topics.toSeq)
   }
 
   // --- InitProducerId (api_key 22) v0–v4 — the FIRST request a

@@ -20,6 +20,7 @@ import graft.operators.{Dedup, Pipeline, Similarity}
   *    element deterministically perturbed per replica; only replica
   *    0 holds the vec_id < 5 query vectors, so ANN probes scan a 10×
   *    corpus for the same query set.
+  * SPARK_GRAFT_CPUS sets the local core count (default 32).
   * Usage: SPARK_GRAFT_SF_DIR=/root/testdata/sf0.1 tools/run.sh
   * graft.tools.ScaleBench [outDir=/tmp/graft_sf1x] */
 object ScaleBench {
@@ -27,7 +28,8 @@ object ScaleBench {
     val baseDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val out = args.headOption.getOrElse("/tmp/graft_sf1x")
     val replicas = sys.env.getOrElse("SPARK_GRAFT_SCALE", "10").toInt
-    val spark = SparkSession.builder().master("local[32]")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val spark = SparkSession.builder().master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", "32")
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.ui.enabled", "false").getOrCreate()

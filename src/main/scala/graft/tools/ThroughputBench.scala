@@ -11,7 +11,8 @@ import graft.streaming.{Partitioners, TopicLog}
   * sf0.1 volume — the broker-comparable number for SURVEY §6. */
 object ThroughputBench {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[32]")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val spark = SparkSession.builder().master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", "32")
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.ui.enabled", "false").getOrCreate()
@@ -67,21 +68,21 @@ object ThroughputBench {
     val wireBatches = 20
     val perBatch = 1000
     val recs = (0 until perBatch).map(i =>
-      WireRecord(s"k$i".getBytes, ("v" * 64 + i).getBytes))
+      WireRecordV2(-1L, s"k$i".getBytes, ("v" * 64 + i).getBytes))
     val t3 = System.nanoTime()
     // every ack is decoded and checked — a silent per-partition error
     // would otherwise publish a false rec/s number
     (0 until wireBatches).foreach { b =>
-      val (_, acks) = decodeProduceResponseV0(
-        exchange(encodeProduceRequestV0(b, "bench", 1, 1000,
+      val (_, acks) = decodeProduceResponse(0,
+        exchange(encodeProduceRequest(0, b, "bench", null, 1, 1000,
           Seq(("wire", (0 until 8).map(p => (p, recs)))))))
       require(acks.head._2.forall(_._2 == 0), s"produce error in batch $b: $acks")
     }
     val wireProduceSec = (System.nanoTime() - t3) / 1e9
     val wireN = wireBatches * perBatch * 8
     val t4 = System.nanoTime()
-    val fetched = decodeFetchResponseV0(
-      exchange(encodeFetchRequestV0(99, "bench", 100, 1,
+    val fetched = decodeFetchResponse(0,
+      exchange(encodeFetchRequest(0, 99, "bench", 100, 1, 1 << 26,
         Seq(("wire", Seq((3, 0L, 1 << 26)))))))
     val wireFetchSec = (System.nanoTime() - t4) / 1e9
     val fetchedN = fetched._2.head._2.head._4.size
@@ -97,8 +98,6 @@ object ThroughputBench {
     val (_, initErr, pid, epoch) = decodeInitProducerIdResponse(4,
       exchange(encodeInitProducerIdRequest(4, 200, "bench", null, 60000)))
     require(initErr == 0, s"InitProducerId failed: $initErr")
-    val recs2 = (0 until perBatch).map(i =>
-      WireRecordV2(-1L, s"k$i".getBytes, ("v" * 64 + i).getBytes))
     val seqs = Array.fill(8)(0)
     val t5 = System.nanoTime()
     (0 until wireBatches).foreach { b =>
@@ -106,7 +105,7 @@ object ThroughputBench {
         exchange(encodeProduceRequestBatches(9, 300 + b, "bench", null, 1, 1000,
           Seq(("idem", (0 until 8).map { p =>
             val s = seqs(p); seqs(p) += perBatch
-            (p, ProducedBatch(pid, epoch, s, recs2))
+            (p, ProducedBatch(pid, epoch, s, recs))
           })))))
       require(acks.head._2.forall(_._2 == 0), s"idempotent produce error in $b: $acks")
     }
@@ -127,7 +126,7 @@ object ThroughputBench {
       (0 until wireBatches).foreach { b =>
         val req = encodeProduceRequestBatches(9, 500 + b, "bench", null, 1, 1000,
           Seq((cname, (0 until 8).map(p =>
-            (p, ProducedBatch(-1L, -1, -1, recs2))))),
+            (p, ProducedBatch(-1L, -1, -1, recs))))),
           codec)
         reqBytes += req.length
         val (_, acks) = decodeProduceResponse(9, exchange(req))
@@ -156,7 +155,7 @@ object ThroughputBench {
         exchange(encodeProduceRequestBatches(9, 700 + b, "bench", "bench-txn",
           1, 1000, Seq(("txn", (0 until 8).map { p =>
             val s = txSeqs(p); txSeqs(p) += perBatch
-            (p, ProducedBatch(txPid, txEpoch, s, recs2, transactional = true))
+            (p, ProducedBatch(txPid, txEpoch, s, recs, transactional = true))
           })))))
       require(acks.head._2.forall(_._2 == 0), s"txn produce error in $b: $acks")
       val (_, ended) = decodeEndTxnResponse(3,

@@ -239,8 +239,8 @@ class CompressionSpec extends AnyFunSuite {
       assert(parts(0)._1 === 76) // UNSUPPORTED_COMPRESSION_TYPE
       assert(parts(1)._1 === 0) // the clean partition appended
       // connection still alive: metadata answers
-      val meta = decodeMetadataResponseV0(exchange(
-        encodeMetadataRequestV0(9, "cli", None)))
+      val meta = decodeMetadataResponse(0, exchange(
+        encodeMetadataRequest(0, 9, "cli", None)))
       assert(meta.topics.map(_.name) === Seq("gz"))
       // p1 really landed; p0's flagged payload appended NOTHING
       assert(broker.topic("gz").read().where("partition = 1").count() === 1)

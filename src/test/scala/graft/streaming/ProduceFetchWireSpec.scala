@@ -158,24 +158,25 @@ class ProduceFetchWireSpec extends AnyFunSuite {
     val (broker, _) = newBroker()
     broker.createTopic("wire", 2)
 
-    def rec(s: String) = WireRecord(s"k$s".getBytes("UTF-8"), s"v$s".getBytes("UTF-8"))
-    val produce1 = broker.handleProduce(encodeProduceRequestV0(10, "cli", 1, 1000,
+    def rec(s: String) =
+      WireRecordV2(-1L, s"k$s".getBytes("UTF-8"), s"v$s".getBytes("UTF-8"))
+    val produce1 = broker.handleProduce(encodeProduceRequest(0, 10, "cli", null, 1, 1000,
       Seq(("wire", Seq(
         (0, Seq(rec("a"), rec("b"))),
         (1, Seq(rec("c"))))))))
-    val (corr1, res1) = decodeProduceResponseV0(produce1)
+    val (corr1, res1) = decodeProduceResponse(0, produce1)
     assert(corr1 === 10)
     assert(res1 === Seq(("wire", Seq((0, 0, 0L), (1, 0, 0L)))))
 
     // second produce continues each partition's log end
-    val produce2 = broker.handleProduce(encodeProduceRequestV0(11, "cli", 1, 1000,
+    val produce2 = broker.handleProduce(encodeProduceRequest(0, 11, "cli", null, 1, 1000,
       Seq(("wire", Seq((0, Seq(rec("d"))))))))
-    assert(decodeProduceResponseV0(produce2)._2 === Seq(("wire", Seq((0, 0, 2L)))))
+    assert(decodeProduceResponse(0, produce2)._2 === Seq(("wire", Seq((0, 0, 2L)))))
 
     // fetch everything from partition 0
-    val fetch = broker.handleFetch(encodeFetchRequestV0(12, "cli", 100, 1,
+    val fetch = broker.handleFetch(encodeFetchRequest(0, 12, "cli", 100, 1, 1 << 20,
       Seq(("wire", Seq((0, 0L, 1 << 20))))))
-    val (corrF, topicsF) = decodeFetchResponseV0(fetch)
+    val (corrF, topicsF) = decodeFetchResponse(0, fetch)
     assert(corrF === 12)
     val (p0, err0, hw0, msgs0) = topicsF.head._2.head
     assert((p0, err0, hw0) === (0, 0, 3L))
@@ -184,22 +185,22 @@ class ProduceFetchWireSpec extends AnyFunSuite {
     assert(msgs0.map(m => new String(m._2.key, "UTF-8")) === Seq("ka", "kb", "kd"))
 
     // bounded fetch: max_bytes fits only the first message (~30 bytes)
-    val bounded = broker.handleFetch(encodeFetchRequestV0(13, "cli", 100, 1,
+    val bounded = broker.handleFetch(encodeFetchRequest(0, 13, "cli", 100, 1, 1 << 20,
       Seq(("wire", Seq((0, 0L, 40))))))
-    val msgsB = decodeFetchResponseV0(bounded)._2.head._2.head._4
+    val msgsB = decodeFetchResponse(0, bounded)._2.head._2.head._4
     assert(msgsB.map(_._1) === Seq(0L), "max_bytes must bound the set")
 
     // offset past the end → error 1 (OFFSET_OUT_OF_RANGE)
-    val past = broker.handleFetch(encodeFetchRequestV0(14, "cli", 100, 1,
+    val past = broker.handleFetch(encodeFetchRequest(0, 14, "cli", 100, 1, 1 << 20,
       Seq(("wire", Seq((1, 99L, 1 << 20))))))
-    val (_, e1, hw1, m1) = decodeFetchResponseV0(past)._2.head._2.head
+    val (_, e1, hw1, m1) = decodeFetchResponse(0, past)._2.head._2.head
     assert((e1, hw1, m1.isEmpty) === (1, 1L, true))
 
     // unknown topic / partition → error 3, rest of the request served
-    val mixed = broker.handleProduce(encodeProduceRequestV0(15, "cli", 1, 1000,
+    val mixed = broker.handleProduce(encodeProduceRequest(0, 15, "cli", null, 1, 1000,
       Seq(("ghost", Seq((0, Seq(rec("x"))))),
         ("wire", Seq((9, Seq(rec("y"))), (1, Seq(rec("z"))))))))
-    val (_, resM) = decodeProduceResponseV0(mixed)
+    val (_, resM) = decodeProduceResponse(0, mixed)
     assert(resM === Seq(
       ("ghost", Seq((0, 3, -1L))),
       ("wire", Seq((9, 3, -1L), (1, 0, 1L)))))
@@ -211,13 +212,13 @@ class ProduceFetchWireSpec extends AnyFunSuite {
     // sizes ~ 26+1, 26+60, 26+1: with max_bytes=80 the middle record
     // overflows — a gap-leaving implementation would skip it but still
     // include offset 2, and the consumer would lose offset 1 forever
-    broker.handleProduce(encodeProduceRequestV0(30, "cli", 1, 1000,
+    broker.handleProduce(encodeProduceRequest(0, 30, "cli", null, 1, 1000,
       Seq(("gap", Seq((0, Seq(
-        WireRecord(null, "a".getBytes("UTF-8")),
-        WireRecord(null, ("b" * 60).getBytes("UTF-8")),
-        WireRecord(null, "c".getBytes("UTF-8")))))))))
-    val resp = decodeFetchResponseV0(broker.handleFetch(encodeFetchRequestV0(
-      31, "cli", 100, 1, Seq(("gap", Seq((0, 0L, 80)))))))
+        WireRecordV2(-1L, null, "a".getBytes("UTF-8")),
+        WireRecordV2(-1L, null, ("b" * 60).getBytes("UTF-8")),
+        WireRecordV2(-1L, null, "c".getBytes("UTF-8")))))))))
+    val resp = decodeFetchResponse(0, broker.handleFetch(encodeFetchRequest(0,
+      31, "cli", 100, 1, 1 << 20, Seq(("gap", Seq((0, 0L, 80)))))))
     val msgs = resp._2.head._2.head._4
     assert(msgs.map(_._1) === Seq(0L), s"offset gap risk: got ${msgs.map(_._1)}")
   }
@@ -225,10 +226,10 @@ class ProduceFetchWireSpec extends AnyFunSuite {
   test("produce response bases are correct for duplicate partition entries") {
     val (broker, _) = newBroker()
     broker.createTopic("dup", 2)
-    def rec(s: String) = WireRecord(null, s.getBytes("UTF-8"))
+    def rec(s: String) = WireRecordV2(-1L, null, s.getBytes("UTF-8"))
     // one request, partition 0 listed twice: 3 records then 2 records
-    val resp = decodeProduceResponseV0(broker.handleProduce(
-      encodeProduceRequestV0(40, "cli", 1, 1000, Seq(("dup", Seq(
+    val resp = decodeProduceResponse(0, broker.handleProduce(
+      encodeProduceRequest(0, 40, "cli", null, 1, 1000, Seq(("dup", Seq(
         (0, Seq(rec("a"), rec("b"), rec("c"))),
         (0, Seq(rec("d"), rec("e")))))))))
     assert(resp._2 === Seq(("dup", Seq((0, 0, 0L), (0, 0, 3L)))),
@@ -293,11 +294,11 @@ class ProduceFetchWireSpec extends AnyFunSuite {
     broker.createTopic("grp", 4)
 
     // commit offsets for two partitions; one out-of-range, one ghost topic
-    val commit = broker.handleOffsetCommit(encodeOffsetCommitRequestV0(
-      20, "cli", "g1", Seq(
+    val commit = broker.handleOffsetCommit(encodeOffsetCommitRequest(0,
+      20, "cli", "g1", -1, "", null, Seq(
         ("grp", Seq((0, 10L, "m"), (2, 30L, null), (9, 5L, null))),
         ("ghost", Seq((0, 1L, null))))))
-    val (corrC, resC) = decodeOffsetCommitResponseV0(commit)
+    val (corrC, resC) = decodeOffsetCommitResponse(0, commit)
     assert(corrC === 20)
     assert(resC === Seq(
       ("grp", Seq((0, 0), (2, 0), (9, 3))),
@@ -306,9 +307,9 @@ class ProduceFetchWireSpec extends AnyFunSuite {
     assert(broker.topic("grp").committed("g1") === Map(0 -> 10L, 2 -> 30L))
 
     // fetch: committed offsets back; -1 where never committed
-    val fetch = broker.handleOffsetFetch(encodeOffsetFetchRequestV0(
-      21, "cli", "g1", Seq(("grp", Seq(0, 1, 2, 9)), ("ghost", Seq(0)))))
-    val (corrF, resF) = decodeOffsetFetchResponseV0(fetch)
+    val fetch = broker.handleOffsetFetch(encodeOffsetFetchRequest(0,
+      21, "cli", Seq(("g1", Some(Seq(("grp", Seq(0, 1, 2, 9)), ("ghost", Seq(0))))))))
+    val (corrF, Seq((_, _, resF))) = decodeOffsetFetchResponse(0, fetch)
     assert(corrF === 21)
     assert(resF === Seq(
       ("grp", Seq((0, 10L, "", 0), (1, -1L, null, 0), (2, 30L, "", 0),
@@ -316,8 +317,8 @@ class ProduceFetchWireSpec extends AnyFunSuite {
       ("ghost", Seq((0, -1L, null, 3)))))
 
     // a second member committing a DISJOINT partition merges (CAS)
-    broker.handleOffsetCommit(encodeOffsetCommitRequestV0(
-      22, "cli2", "g1", Seq(("grp", Seq((1, 99L, null))))))
+    broker.handleOffsetCommit(encodeOffsetCommitRequest(0,
+      22, "cli2", "g1", -1, "", null, Seq(("grp", Seq((1, 99L, null))))))
     assert(broker.topic("grp").committed("g1") ===
       Map(0 -> 10L, 1 -> 99L, 2 -> 30L))
   }

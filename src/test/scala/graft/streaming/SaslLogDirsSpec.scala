@@ -100,7 +100,7 @@ class SaslLogDirsSpec extends AnyFunSuite {
         exchange(s1, encodeApiVersionsRequest(0, 1, "cli")))
       assert(av.errorCode === 0)
       // ...but a normal key pre-auth kills the connection
-      s1.getOutputStream.write(encodeMetadataRequestV0(2, "cli", None))
+      s1.getOutputStream.write(encodeMetadataRequest(0, 2, "cli", None))
       s1.getOutputStream.flush()
       val in = new DataInputStream(s1.getInputStream)
       assert(in.read() === -1) // server closed

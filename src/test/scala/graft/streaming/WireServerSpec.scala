@@ -19,6 +19,14 @@ class WireServerSpec extends AnyFunSuite {
   private def exchange(sock: Socket, request: Array[Byte]): Array[Byte] =
     WireTestClient.exchange(sock, request)
 
+  /** A ListOffsets v0 answer as the fields v0 carries:
+    * (partition, error, offsets) per topic. */
+  private def listOffsetsV0(response: Array[Byte])
+      : Seq[(String, Seq[(Int, Int, Seq[Long])])] =
+    decodeListOffsetsResponse(0, response)._2.map { case (t, ps) =>
+      (t, ps.map(p => (p._1, p._2, p._5)))
+    }
+
   test("a raw socket client discovers, produces, fetches, and commits") {
     val root = Files.createTempDirectory("graft-wiresrv").toString
     val broker = new Broker(spark, root)
@@ -34,8 +42,8 @@ class WireServerSpec extends AnyFunSuite {
         .intersect(Set(0, 1, 3, 8, 9, 18)) === Set(0, 1, 3, 8, 9, 18))
 
       // Metadata: topic visible with its partitions, this broker leads
-      val meta = decodeMetadataResponseV0(exchange(sock,
-        encodeMetadataRequestV0(2, "cli", None)))
+      val meta = decodeMetadataResponse(0, exchange(sock,
+        encodeMetadataRequest(0, 2, "cli", None)))
       assert(meta.brokers === Seq((0, "127.0.0.1", server.boundPort)))
       assert(meta.topics.map(t => (t.name, t.partitions.length)) === Seq(("tcp", 2)))
       // ... and at v4 (rack/cluster_id/controller/is_internal fields),
@@ -46,59 +54,59 @@ class WireServerSpec extends AnyFunSuite {
       assert(meta4.topics.map(t => (t.name, t.partitions.length)) === Seq(("tcp", 2)))
 
       // Produce over the socket → real offsets in the manifest log
-      def rec(s: String) = WireRecord(null, s.getBytes("UTF-8"))
-      val prodResp = decodeProduceResponseV0(exchange(sock,
-        encodeProduceRequestV0(3, "cli", 1, 1000,
+      def rec(s: String) = WireRecordV2(-1L, null, s.getBytes("UTF-8"))
+      val prodResp = decodeProduceResponse(0, exchange(sock,
+        encodeProduceRequest(0, 3, "cli", null, 1, 1000,
           Seq(("tcp", Seq((0, Seq(rec("a"), rec("b"))), (1, Seq(rec("c")))))))))
       assert(prodResp._2 === Seq(("tcp", Seq((0, 0, 0L), (1, 0, 0L)))))
       assert(broker.topic("tcp").read().count() === 3)
 
       // Fetch the records back over the same connection
-      val fetched = decodeFetchResponseV0(exchange(sock,
-        encodeFetchRequestV0(4, "cli", 100, 1, Seq(("tcp", Seq((0, 0L, 1 << 20)))))))
+      val fetched = decodeFetchResponse(0, exchange(sock,
+        encodeFetchRequest(0, 4, "cli", 100, 1, 1 << 20, Seq(("tcp", Seq((0, 0L, 1 << 20)))))))
       val (_, _, hw, msgs) = fetched._2.head._2.head
       assert(hw === 2L)
       assert(msgs.map(m => new String(m._2.value, "UTF-8")) === Seq("a", "b"))
 
       // ListOffsets: latest (-1), earliest (-2), and by timestamp
-      val lo = decodeListOffsetsResponseV0(exchange(sock,
-        encodeListOffsetsRequestV0(9, "cli", Seq(("tcp", Seq(
+      val lo = listOffsetsV0(exchange(sock,
+        encodeListOffsetsRequest(0, 9, "cli", Seq(("tcp", Seq(
           (0, -1L, 1), (0, -2L, 1), (1, -1L, 1), (9, -1L, 1)))))))
-      assert(lo._2 === Seq(("tcp", Seq(
+      assert(lo === Seq(("tcp", Seq(
         (0, 0, Seq(2L)), (0, 0, Seq(0L)), (1, 0, Seq(1L)), (9, 3, Seq())))))
       // a timestamp in the far past answers the first offset; in the
       // far future, no offsets
-      val past = decodeListOffsetsResponseV0(exchange(sock,
-        encodeListOffsetsRequestV0(10, "cli", Seq(("tcp", Seq((0, 1L, 1)))))))
-      assert(past._2.head._2.head === ((0, 0, Seq(0L))))
-      val future = decodeListOffsetsResponseV0(exchange(sock,
-        encodeListOffsetsRequestV0(11, "cli",
+      val past = listOffsetsV0(exchange(sock,
+        encodeListOffsetsRequest(0, 10, "cli", Seq(("tcp", Seq((0, 1L, 1)))))))
+      assert(past.head._2.head === ((0, 0, Seq(0L))))
+      val future = listOffsetsV0(exchange(sock,
+        encodeListOffsetsRequest(0, 11, "cli",
           Seq(("tcp", Seq((0, Long.MaxValue / 2, 1)))))))
-      assert(future._2.head._2.head === ((0, 0, Seq())))
+      assert(future.head._2.head === ((0, 0, Seq())))
 
       // retention-aware EARLIEST: truncate partition 0's front, then
       // -2 must answer the first EXISTING offset, not 0 — and a
       // far-past negative timestamp must answer (not kill the
       // connection on micros overflow)
       broker.topic("tcp").truncateBefore(0, 1L)
-      val afterTrunc = decodeListOffsetsResponseV0(exchange(sock,
-        encodeListOffsetsRequestV0(12, "cli", Seq(("tcp", Seq(
+      val afterTrunc = listOffsetsV0(exchange(sock,
+        encodeListOffsetsRequest(0, 12, "cli", Seq(("tcp", Seq(
           (0, -2L, 1), (0, Long.MinValue, 1)))))))
-      assert(afterTrunc._2.head._2 === Seq((0, 0, Seq(1L)), (0, 0, Seq(1L))))
+      assert(afterTrunc.head._2 === Seq((0, 0, Seq(1L)), (0, 0, Seq(1L))))
 
       // Commit + fetch offsets for a group
-      exchange(sock, encodeOffsetCommitRequestV0(5, "cli", "g",
+      exchange(sock, encodeOffsetCommitRequest(0, 5, "cli", "g", -1, "", null,
         Seq(("tcp", Seq((0, 2L, null))))))
-      val offs = decodeOffsetFetchResponseV0(exchange(sock,
-        encodeOffsetFetchRequestV0(6, "cli", "g", Seq(("tcp", Seq(0, 1))))))
-      assert(offs._2 === Seq(("tcp", Seq((0, 2L, "", 0), (1, -1L, null, 0)))))
+      val offs = decodeOffsetFetchResponse(0, exchange(sock,
+        encodeOffsetFetchRequest(0, 6, "cli", Seq(("g", Some(Seq(("tcp", Seq(0, 1)))))))))
+      assert(offs._2.head._3 === Seq(("tcp", Seq((0, 2L, "", 0), (1, -1L, null, 0)))))
       assert(broker.topic("tcp").committed("g") === Map(0 -> 2L))
 
       // a SECOND connection sees the same log state
       val sock2 = new Socket("127.0.0.1", server.boundPort)
       try {
-        val again = decodeFetchResponseV0(exchange(sock2,
-          encodeFetchRequestV0(7, "cli2", 100, 1, Seq(("tcp", Seq((1, 0L, 1 << 20)))))))
+        val again = decodeFetchResponse(0, exchange(sock2,
+          encodeFetchRequest(0, 7, "cli2", 100, 1, 1 << 20, Seq(("tcp", Seq((1, 0L, 1 << 20)))))))
         assert(again._2.head._2.head._4
           .map(m => new String(m._2.value, "UTF-8")) === Seq("c"))
       } finally sock2.close()
@@ -150,8 +158,8 @@ class WireServerSpec extends AnyFunSuite {
 
       // a v0 fetch of the same data still works (headers legitimately
       // absent — that format cannot carry them)
-      val v0 = decodeFetchResponseV0(exchange(sock,
-        encodeFetchRequestV0(32, "cli", 100, 1, Seq(("hdr", Seq((0, 0L, 1 << 20)))))))
+      val v0 = decodeFetchResponse(0, exchange(sock,
+        encodeFetchRequest(0, 32, "cli", 100, 1, 1 << 20, Seq(("hdr", Seq((0, 0L, 1 << 20)))))))
       assert(v0._2.head._2.head._4.map(m => new String(m._2.value, "UTF-8")) ===
         Seq("v1", "v2", "v3"))
 
@@ -268,14 +276,14 @@ class WireServerSpec extends AnyFunSuite {
       def b(s: String) = s.getBytes("UTF-8")
       // FindCoordinator first, as a real client would: a single-broker
       // graft always answers itself
-      val (fcCorr, fcErr, fcNode, fcHost, fcPort) =
-        decodeFindCoordinatorResponseV0(exchange(sockA,
-          encodeFindCoordinatorRequestV0(39, "a", "wg")))
+      val (fcCorr, Seq((_, fcErr, fcNode, fcHost, fcPort))) =
+        decodeFindCoordinatorResponse(0, exchange(sockA,
+          encodeFindCoordinatorRequest(0, 39, "a", 0, Seq("wg"))))
       assert(fcCorr === 39 && fcErr === 0 && fcNode === 0)
       assert(fcHost === "127.0.0.1" && fcPort === server.boundPort)
       // A joins with an empty member id and becomes leader
-      val ja = decodeJoinGroupResponseV0(exchange(sockA,
-        encodeJoinGroupRequestV0(40, "a", "wg", 30000, "", "consumer",
+      val ja = decodeJoinGroupResponse(0, exchange(sockA,
+        encodeJoinGroupRequest(0, 40, "a", "wg", 30000, 30000, "", null, "consumer",
           Seq(("range", b("gt"))))))
       assert(ja.errorCode === 0 && ja.generationId === 1)
       assert(ja.leaderId === ja.memberId)
@@ -283,23 +291,24 @@ class WireServerSpec extends AnyFunSuite {
       // leader computes the assignment (library Assignors) and syncs it
       val full = Assignors.range(4, Seq(ja.memberId))
       val asgA = full(ja.memberId).map(p => s"gt:$p").mkString(",")
-      val sa = decodeSyncGroupResponseV0(exchange(sockA,
-        encodeSyncGroupRequestV0(41, "a", "wg", 1, ja.memberId,
+      val sa = decodeSyncGroupResponse(0, exchange(sockA,
+        encodeSyncGroupRequest(0, 41, "a", "wg", 1, ja.memberId, null, null, null,
           Seq((ja.memberId, b(asgA))))))
       assert(sa._2 === 0)
-      assert(new String(sa._3, "UTF-8") === "gt:0,gt:1,gt:2,gt:3")
-      assert(decodeErrorResponse(exchange(sockA,
-        encodeHeartbeatRequestV0(42, "a", "wg", 1, ja.memberId)))._2 === 0)
+      assert(new String(sa._5, "UTF-8") === "gt:0,gt:1,gt:2,gt:3")
+      assert(decodeHeartbeatResponse(0, exchange(sockA,
+        encodeHeartbeatRequest(0, 42, "a", "wg", 1, ja.memberId)))._2 === 0)
 
       // B joins → rebalance; A's heartbeat reports it; A rejoins
-      val jb = decodeJoinGroupResponseV0(exchange(sockB,
-        encodeJoinGroupRequestV0(43, "b", "wg", 30000, "", "consumer",
+      val jb = decodeJoinGroupResponse(0, exchange(sockB,
+        encodeJoinGroupRequest(0, 43, "b", "wg", 30000, 30000, "", null, "consumer",
           Seq(("range", b("gt"))))))
       assert(jb.errorCode === 0 && jb.generationId === 2)
-      assert(decodeErrorResponse(exchange(sockA,
-        encodeHeartbeatRequestV0(44, "a", "wg", 1, ja.memberId)))._2 === 27)
-      val ja2 = decodeJoinGroupResponseV0(exchange(sockA,
-        encodeJoinGroupRequestV0(45, "a", "wg", 30000, ja.memberId, "consumer",
+      assert(decodeHeartbeatResponse(0, exchange(sockA,
+        encodeHeartbeatRequest(0, 44, "a", "wg", 1, ja.memberId)))._2 === 27)
+      val ja2 = decodeJoinGroupResponse(0, exchange(sockA,
+        encodeJoinGroupRequest(0, 45, "a", "wg", 30000, 30000, ja.memberId, null,
+          "consumer",
           Seq(("range", b("gt"))))))
       assert(ja2.generationId === 2 && ja2.leaderId === ja.memberId)
       assert(ja2.members.map(_._1).toSet === Set(ja.memberId, jb.memberId))
@@ -307,29 +316,32 @@ class WireServerSpec extends AnyFunSuite {
       val split = Assignors.range(4, ja2.members.map(_._1))
       val sync2 = ja2.members.map(_._1).map(id =>
         (id, b(split(id).map(p => s"gt:$p").mkString(","))))
-      decodeSyncGroupResponseV0(exchange(sockA,
-        encodeSyncGroupRequestV0(46, "a", "wg", 2, ja.memberId, sync2)))
-      val sb = decodeSyncGroupResponseV0(exchange(sockB,
-        encodeSyncGroupRequestV0(47, "b", "wg", 2, jb.memberId, Seq.empty)))
+      decodeSyncGroupResponse(0, exchange(sockA,
+        encodeSyncGroupRequest(0, 46, "a", "wg", 2, ja.memberId, null, null, null,
+          sync2)))
+      val sb = decodeSyncGroupResponse(0, exchange(sockB,
+        encodeSyncGroupRequest(0, 47, "b", "wg", 2, jb.memberId, null, null, null,
+          Seq.empty)))
       assert(sb._2 === 0)
-      val bShare = new String(sb._3, "UTF-8")
+      val bShare = new String(sb._5, "UTF-8")
       assert(bShare.nonEmpty && bShare.startsWith("gt:"))
-      assert(decodeErrorResponse(exchange(sockB,
-        encodeHeartbeatRequestV0(48, "b", "wg", 2, jb.memberId)))._2 === 0)
+      assert(decodeHeartbeatResponse(0, exchange(sockB,
+        encodeHeartbeatRequest(0, 48, "b", "wg", 2, jb.memberId)))._2 === 0)
 
       // DescribeGroups shows the live membership and assignments
-      val (_, described) = decodeDescribeGroupsResponseV0(exchange(sockA,
-        encodeDescribeGroupsRequestV0(49, "a", Seq("wg", "nope"))))
+      val described = decodeDescribeGroupsResponse(0, exchange(sockA,
+        encodeDescribeGroupsRequest(0, 49, "a", Seq("wg", "nope"))))._2.map(_.group)
       assert(described.head.state === "Stable")
       assert(described.head.protocolType === "consumer")
       assert(described.head.members.map(_._1).toSet === Set(ja.memberId, jb.memberId))
       assert(described(1).state === "Dead")
 
       // A leaves; B rejoins as sole leader
-      assert(decodeErrorResponse(exchange(sockA,
-        encodeLeaveGroupRequestV0(50, "a", "wg", ja.memberId)))._2 === 0)
-      val jb2 = decodeJoinGroupResponseV0(exchange(sockB,
-        encodeJoinGroupRequestV0(51, "b", "wg", 30000, jb.memberId, "consumer",
+      assert(decodeLeaveGroupResponse(0, exchange(sockA,
+        encodeLeaveGroupRequest(0, 50, "a", "wg", Seq((ja.memberId, null, null)))))._2 === 0)
+      val jb2 = decodeJoinGroupResponse(0, exchange(sockB,
+        encodeJoinGroupRequest(0, 51, "b", "wg", 30000, 30000, jb.memberId, null,
+          "consumer",
           Seq(("range", b("gt"))))))
       assert(jb2.leaderId === jb.memberId)
       assert(jb2.members.map(_._1) === Seq(jb.memberId))
@@ -348,10 +360,12 @@ class WireServerSpec extends AnyFunSuite {
     try {
       def rec(s: String) = WireRecordV2(-1L, null, s.getBytes("UTF-8"))
       // CreateTopics: new topic lands; duplicate and bad partitions error
-      val created = decodeTopicErrorsResponseV0(exchange(sock,
-        encodeCreateTopicsRequestV0(60, "adm",
-          Seq(("adm-t", 2, 1), ("adm-t", 2, 1), ("bad", 0, 1)), 1000)))
-      assert(created._2.map(_._2) === Seq(0, 36, 37))
+      def topic(name: String, partitions: Int) =
+        CreatableTopic(name, partitions, 1, Seq.empty, Seq.empty)
+      val created = decodeCreateTopicsResponse(0, exchange(sock,
+        encodeCreateTopicsRequest(0, 60, "adm",
+          Seq(topic("adm-t", 2), topic("adm-t", 2), topic("bad", 0)), 1000)))
+      assert(created._2.map(_.errorCode) === Seq(0, 36, 37))
       assert(broker.topicExists("adm-t") && !broker.topicExists("bad"))
       // the created topic takes real produces
       decodeProduceResponse(3, exchange(sock,
@@ -360,8 +374,8 @@ class WireServerSpec extends AnyFunSuite {
       assert(broker.topic("adm-t").read().count() === 3)
 
       // DeleteRecords truncates the front; -1 truncates to the end
-      val dr = decodeDeleteRecordsResponseV0(exchange(sock,
-        encodeDeleteRecordsRequestV0(62, "adm",
+      val dr = decodeDeleteRecordsResponse(0, exchange(sock,
+        encodeDeleteRecordsRequest(0, 62, "adm",
           Seq(("adm-t", Seq((0, 2L))), ("missing", Seq((0, 1L)))), 1000)))
       assert(dr._2 === Seq(("adm-t", Seq((0, 2L, 0))), ("missing", Seq((0, -1L, 3)))))
       assert(broker.topic("adm-t").logStartOffsets()(0) === 2L)
@@ -369,12 +383,12 @@ class WireServerSpec extends AnyFunSuite {
       // commit an offset so ListGroups sees an offsets-only group next
       // to nothing else; protocol_type is empty for it
       broker.topic("adm-t").commit("offline-g", Map(0 -> 2L))
-      val lg = decodeListGroupsResponseV0(exchange(sock,
-        encodeListGroupsRequestV0(63, "adm")))
+      val lg = decodeListGroupsResponse(0, exchange(sock,
+        encodeListGroupsRequest(0, 63, "adm")))
       assert(lg._2 === 0)
-      assert(lg._3.contains(("offline-g", "")))
-      val (_, desc) = decodeDescribeGroupsResponseV0(exchange(sock,
-        encodeDescribeGroupsRequestV0(64, "adm", Seq("offline-g"))))
+      assert(lg._3.map(g => (g._1, g._2)).contains(("offline-g", "")))
+      val desc = decodeDescribeGroupsResponse(0, exchange(sock,
+        encodeDescribeGroupsRequest(0, 64, "adm", Seq("offline-g"))))._2.map(_.group)
       assert(desc.head.state === "Empty")
 
       // DescribeConfigs — the RPC kafka-topics.sh --describe sends
@@ -400,9 +414,9 @@ class WireServerSpec extends AnyFunSuite {
       }
 
       // DeleteTopics removes it; a fetch then reports unknown topic
-      val del = decodeTopicErrorsResponseV0(exchange(sock,
-        encodeDeleteTopicsRequestV0(65, "adm", Seq("adm-t", "ghost"), 1000)))
-      assert(del._2 === Seq(("adm-t", 0), ("ghost", 3)))
+      val del = decodeDeleteTopicsResponse(0, exchange(sock,
+        encodeDeleteTopicsRequest(0, 65, "adm", Seq(("adm-t", null), ("ghost", null)), 1000)))
+      assert(del._2.map(t => (t._1, t._3)) === Seq(("adm-t", 0), ("ghost", 3)))
       assert(!broker.topicExists("adm-t"))
     } finally {
       sock.close()
@@ -732,8 +746,8 @@ class WireServerSpec extends AnyFunSuite {
       assert(del === Seq(("done-g", 0), ("ghost-g", 69)))
       assert(broker.topic("dg-a").committed("done-g") === Map.empty)
       assert(broker.topic("dg-b").committed("done-g") === Map.empty)
-      val (_, _, listed) = decodeListGroupsResponseV0(exchange(sock,
-        encodeListGroupsRequestV0(82, "adm")))
+      val (_, _, listed) = decodeListGroupsResponse(0, exchange(sock,
+        encodeListGroupsRequest(0, 82, "adm")))
       assert(!listed.exists(_._1 == "done-g"))
       // deleting again: the identity is gone, not just emptied
       val (_, again) = decodeDeleteGroupsResponse(0, exchange(sock,
@@ -776,12 +790,12 @@ class WireServerSpec extends AnyFunSuite {
     try {
       def b(s: String) = s.getBytes("UTF-8")
       // one live classic group (join + sync → Stable)
-      val j = decodeJoinGroupResponseV0(exchange(sock,
-        encodeJoinGroupRequestV0(1, "cli", "mg-classic", 30000, "",
+      val j = decodeJoinGroupResponse(0, exchange(sock,
+        encodeJoinGroupRequest(0, 1, "cli", "mg-classic", 30000, 30000, "", null,
           "consumer", Seq(("range", b("mgt"))))))
       assert(j.errorCode === 0)
-      assert(decodeSyncGroupResponseV0(exchange(sock,
-        encodeSyncGroupRequestV0(2, "cli", "mg-classic", 1, j.memberId,
+      assert(decodeSyncGroupResponse(0, exchange(sock,
+        encodeSyncGroupRequest(0, 2, "cli", "mg-classic", 1, j.memberId, null, null, null,
           Seq((j.memberId, b("mgt:0,mgt:1"))))))._2 === 0)
       // one 848 group and one offsets-only group
       assert(broker.coordinator848.heartbeat("mg-848", "", 0, null, null,
@@ -888,9 +902,9 @@ class WireServerSpec extends AnyFunSuite {
       assert(broker.topic("ta-asg").numPartitions === 2)
 
       // DeleteRecords v2 flexible truncates and reports watermarks
-      def rec(s: String) = WireRecord(null, s.getBytes("UTF-8"))
-      decodeProduceResponseV0(exchange(sock,
-        encodeProduceRequestV0(4, "adm", 1, 1000,
+      def rec(s: String) = WireRecordV2(-1L, null, s.getBytes("UTF-8"))
+      decodeProduceResponse(0, exchange(sock,
+        encodeProduceRequest(0, 4, "adm", null, 1, 1000,
           Seq(("ta-a", Seq((0, Seq(rec("a"), rec("b"), rec("c")))))))))
       val (_, dr2) = decodeDeleteRecordsResponse(2, exchange(sock,
         encodeDeleteRecordsRequest(2, 5, "adm",
